@@ -14,21 +14,25 @@ import org.apache.spark.sql.SparkSession
   *  - one warm SparkSession; a full warm-up pass first (codegen + JIT);
   *  - `queries` = per-query wall seconds from a serial timed pass (true
   *    single-query latency), `serial_total` their sum;
-  *  - `value` (the headline suite total) = best wall-clock of two passes
-  *    that run the 30 queries with inter-query concurrency (16 submit
+  *  - `value` (the headline suite total) = best wall-clock of 16 passes
+  *    that run the 30 queries with inter-query concurrency (24 submit
   *    threads, one shared scheduler) — the engine's suite throughput. The
-  *    oracle's 1.03 s likewise used all 32 cores; Spark's per-job dispatch
-  *    floor in this sandbox is ~40 ms, so intra-query parallelism alone
-  *    cannot amortize it at toy scale, inter-query concurrency does.
+  *    oracle likewise used every core; Spark's per-job dispatch floor is
+  *    ~40 ms, so intra-query parallelism alone cannot amortize it at toy
+  *    scale, inter-query concurrency does.
   *  - every query is forced with `collect()` (`count()` would let Catalyst
   *    prune the computed columns).
   *
-  * Harness configs are sized for the bench scale factor (~600 k rows), NOT
-  * for production: AQE is off because per-stage materialization latency
-  * dominates at toy scale (the library itself runs fine with AQE on — see
-  * Verify), `maxPartitionBytes=1m` splits the ≤11 MB files across cores,
-  * and shuffle.partitions=8 keeps post-shuffle task counts proportionate.
-  * At 100 TB the same queries run with AQE on and default split sizes.
+  * The session is [[Engine.Profile.Bench]] (sized for the bench scale
+  * factor, not production — the library itself runs fine with AQE on, see
+  * Verify) on `local[SPARK_GRAFT_CPUS or nproc]`; shuffle.partitions=8
+  * keeps post-shuffle task counts proportionate. At 100 TB the same
+  * queries run with AQE on and default split sizes.
+  *
+  * `Bench --only a,b [--reps n]` is the targeted re-measurement mode: an
+  * interleaved A/B of the named legs under the same session, printing
+  * every rep and leaving `target/bench_summary.json` untouched (see
+  * [[runOnly]]).
   */
 object Bench {
 
@@ -70,28 +74,70 @@ object Bench {
   def passesJson(samples: Seq[(Double, Double)]): String =
     samples.map { case (w, c) => s"[$w,$c]" }.mkString("[", ",", "]")
 
+  /** `--only a,b [--reps n]` → the named legs (each a gated query) and
+    * the rep count (default 3); `None` for the full-suite run. Unknown
+    * legs and any other arguments are rejected, so a typo never times
+    * nothing. */
+  def parseOnly(args: Seq[String]): Option[(Seq[String], Int)] = {
+    val (list, reps) = args match {
+      case Seq() => return None
+      case Seq("--only", l) => (l, 3)
+      case Seq("--only", l, "--reps", n) => (l, n.toInt)
+      case _ => throw new IllegalArgumentException(
+        s"usage: Bench [--only a,b [--reps n]]; got ${args.mkString(" ")}")
+    }
+    val names = list.split(",").toSeq.filter(_.nonEmpty)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(names.nonEmpty && unknown.isEmpty, s"unknown legs: ${unknown.mkString(", ")}")
+    require(reps >= 1, s"--reps must be >= 1, got $reps")
+    Some((names, reps))
+  }
+
+  /** Interleaved re-measurement of `names`: each leg runs once to warm
+    * (JIT, codegen), then the reps run rep-major — rep 1 of every leg,
+    * then rep 2 of every leg — so machine-load drift hits all legs alike.
+    * Every timed run starts from an empty cache and empty memo handles,
+    * so no leg reads another's (or its own earlier) persisted results. */
+  def runOnly(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int): Unit = {
+    def run(n: String): Double = seconds(SparkEntry.queries(n)(spark, sfDir).collect())
+    names.foreach(run)
+    val times = (1 to reps).flatMap { r =>
+      names.map { n =>
+        spark.sharedState.cacheManager.clearCache()
+        Tables.clearPairCache()
+        val t = run(n)
+        println(f"[bench] rep$r $n $t%.3f s")
+        n -> t
+      }
+    }.groupMap(_._1)(_._2)
+    names.foreach { n =>
+      val ts = times(n).sorted
+      val median = (ts((ts.size - 1) / 2) + ts(ts.size / 2)) / 2
+      println(f"[bench] $n best=${ts.head}%.3f median=$median%.3f worst=${ts.last}%.3f")
+    }
+  }
+
+  private def seconds(body: => Any): Double = {
+    val t0 = System.nanoTime()
+    body
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val localDir =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/spark-graft-bench"
-      else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.locality.wait", "0")
-      .config("spark.local.dir", localDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // scheduler mode for the concurrent pass, env-overridable for a/b
-      // runs (serial timings are one job at a time and unaffected)
-      .config("spark.scheduler.mode", sys.env.getOrElse("SPARK_GRAFT_SCHED", "FIFO"))
-      .getOrCreate()
+    val only = parseOnly(args.toSeq)
+    val spark = Engine.session(Engine.localMaster, shufflePartitions = 8,
+      profile = Engine.Profile.Bench)
     spark.sparkContext.setLogLevel("WARN")
+    try only match {
+      case Some((names, reps)) => runOnly(spark, sfDir, names, reps)
+      case None => suite(spark, sfDir)
+    } finally spark.stop()
+  }
 
+  /** The full-suite run: prints the one JSON line and writes it to
+    * `target/bench_summary.json`. */
+  private def suite(spark: SparkSession, sfDir: String): Unit = {
     // headline suite = the 30 declared queries (comparable to BASELINE.md);
     // extension operators (q31+) are timed separately below.
     val names = Queries.all.keys.toSeq.sorted
@@ -101,24 +147,18 @@ object Bench {
     // concurrent passes mutate this from many submit threads
     val failed: java.util.Set[String] =
       java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    def runOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).collect(); () }
+    def runOne(name: String): Double = seconds {
+      try SparkEntry.queries(name)(spark, sfDir).collect()
       catch { case e: Throwable =>
         failed.add(name)
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-      (System.nanoTime() - t0) / 1e9
     }
 
     // the canary job: fixed CPU-bound work through the same scheduler the
     // timed legs use; ~tens of ms idle, scales with contention
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(4000000L)
-        .agg(org.apache.spark.sql.functions.sum("id")).collect()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def canary(): Double =
+      seconds(spark.range(4000000L).agg(org.apache.spark.sql.functions.sum("id")).collect())
     val canarySamples = scala.collection.mutable.Map[String, Double]()
     def sampleCanary(leg: String): Unit = {
       val c = canary()
@@ -141,9 +181,9 @@ object Bench {
     val serial = names.map(n => n -> math.min(p1(n), p2(n)))
     val serialTotal = serial.map(_._2).sum
 
-    // 24 submit threads: sweeps showed 16 suffers multi-second outliers
-    // under background load while 24-30 hold a tight 2.3-2.7s spread; 24
-    // leaves headroom on the 32 executor slots
+    // 24 submit threads: sweeps on a 32-core host showed 16 suffers
+    // multi-second outliers under background load while 24-30 hold a
+    // tight 2.3-2.7s spread
     val threads = 24
     val pool = Executors.newFixedThreadPool(threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -154,11 +194,8 @@ object Bench {
     // q22 at 0.4s serial ran 2-10s in-pass when submitted 23rd, and the
     // best-of-8 wall dropped 2.05s -> 1.75s just from reordering)
     val lptOrder = names.sortBy(n => -math.min(p1(n), p2(n)))
-    def concurrentPass(): Double = {
-      val t0 = System.nanoTime()
-      Await.result(Future.sequence(lptOrder.map(n => Future(runOne(n)))), 30.minutes)
-      (System.nanoTime() - t0) / 1e9
-    }
+    def concurrentPass(): Double =
+      seconds(Await.result(Future.sequence(lptOrder.map(n => Future(runOne(n)))), 30.minutes))
     // best-of-16 (10 until r19): the sandbox carries erratic background
     // load (±50% on identical runs — round 8 measured 2.60→2.01 s on one
     // jar purely with load, and r19 watched load arrive in multi-minute
@@ -236,9 +273,15 @@ object Bench {
     // scratch — clearPairCache drops the memo handles so the builds
     // actually run — and the LAST rep leaves the memos warm for the
     // consumer timings below, exactly as before.
-    val sharedLegNames = Seq("shared_pair_table", "shared_component_table",
-      "shared_centroid_table", "shared_classifier_weights",
-      "shared_hashed_fp32", "shared_bigram_ce", "shared_bpe_merges")
+    val sharedBuilds: Seq[(String, Tables => Any)] = Seq(
+      ("shared_pair_table", _.documentNearDupPairs), // persists + materializes
+      ("shared_component_table", _.documentNearDupComponents), // one CC run, persisted
+      ("shared_centroid_table", _.embeddingCentroids8), // two Lloyd passes, persisted
+      ("shared_classifier_weights", PipelineQueries.sharedClassifierWeights), // 4 GD passes (r20)
+      ("shared_hashed_fp32", _.hashedFeaturePairs32), // one explode+agg, persisted (r21)
+      ("shared_bigram_ce", _.bigramCeScores), // trained-LM scoring chain, persisted (r21)
+      ("shared_bpe_merges", PipelineQueries.sharedBpeMerges8)) // batched BPE rounds (r21)
+    val sharedLegNames = sharedBuilds.map(_._1)
     val sharedReps: Seq[Seq[Double]] = (1 to 2).map { _ =>
       // record under the EMITTED leg names so a flag matches the
       // drift/slow entries it de-noises (review r18: "shared_tables"
@@ -246,49 +289,18 @@ object Bench {
       sharedLegNames.foreach(sampleCanary)
       spark.sharedState.cacheManager.clearCache()
       Tables.clearPairCache()
-      val marks = Seq.newBuilder[Long]
-      marks += System.nanoTime()
-      Tables(spark, sfDir).documentNearDupPairs // persists + materializes
-      marks += System.nanoTime()
-      Tables(spark, sfDir).documentNearDupComponents // one CC run, persisted
-      marks += System.nanoTime()
-      Tables(spark, sfDir).embeddingCentroids8 // two Lloyd passes, persisted
-      marks += System.nanoTime()
-      PipelineQueries.sharedClassifierWeights(Tables(spark, sfDir)) // 4 GD passes (r20)
-      marks += System.nanoTime()
-      Tables(spark, sfDir).hashedFeaturePairs32 // one explode+agg, persisted (r21)
-      marks += System.nanoTime()
-      Tables(spark, sfDir).bigramCeScores // trained-LM scoring chain, persisted (r21)
-      marks += System.nanoTime()
-      PipelineQueries.sharedBpeMerges8(Tables(spark, sfDir)) // batched BPE rounds (r21)
-      marks += System.nanoTime()
-      val ts = marks.result()
-      val r = ts.sliding(2).map { case Seq(a, b) => (b - a) / 1e9 }.toSeq
+      val r = sharedBuilds.map { case (_, build) => seconds(build(Tables(spark, sfDir))) }
       sharedLegNames.foreach(sampleCanary)
       r
     }
-    def sharedBest(i: Int): Double = sharedReps.map(_(i)).min
-    val tSharedPairs = sharedBest(0)
-    val tSharedComp = sharedBest(1)
-    val tSharedCents = sharedBest(2)
-    val tSharedClf = sharedBest(3)
-    val tSharedFp32 = sharedBest(4)
-    val tSharedBgCe = sharedBest(5)
-    val tSharedBpe = sharedBest(6)
+    val shared = sharedLegNames.zip(sharedReps.transpose.map(_.min))
     val extWarmMemo = extNames.filter(memoConsumers).map { n =>
       sampleCanary(n)
       val best = (1 to 2).map(_ => runOne(n)).min
       sampleCanary(n)
       n -> best
     }
-    val ext = (extCold ++ extWarmMemo ++
-      Seq("shared_pair_table" -> tSharedPairs,
-          "shared_component_table" -> tSharedComp,
-          "shared_centroid_table" -> tSharedCents,
-          "shared_classifier_weights" -> tSharedClf,
-          "shared_hashed_fp32" -> tSharedFp32,
-          "shared_bigram_ce" -> tSharedBgCe,
-          "shared_bpe_merges" -> tSharedBpe)).sortBy(_._1)
+    val ext = (extCold ++ extWarmMemo ++ shared).sortBy(_._1)
 
     val qs = serial.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -379,6 +391,5 @@ object Bench {
     java.nio.file.Files.createDirectories(outFile.getParent)
     java.nio.file.Files.write(outFile, json.getBytes("UTF-8"))
     println(json)
-    spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Regenerates docs/PLANS.txt: formatted physical plans for EVERY
@@ -132,18 +131,10 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.drop(1).headOption.getOrElse("docs/PLANS.txt")
-    // plan-inspection mode: sortedLarge's eager localCheckpoint would
-    // EXECUTE each O(N)-sorted query during the dump and truncate its
-    // plan to an RDD scan, hiding exactly the upstream operators this
-    // file exists to exhibit — dump the plain lazy form instead
-    sys.props("spark.graft.sortMode") = "plain"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // pinned at 4 partitions, not sized from the host: the partition
+    // count is printed in every exchange, and the dump is a committed
+    // artifact that must diff cleanly across machines
+    val spark = Engine.session("local[4]", shufflePartitions = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (sf0.001, AQE initial plans) — evidence of " +
@@ -151,7 +142,9 @@ object PlanDump {
     sb.append("# Generated by `sbt \"runMain graft.PlanDump\"`\n\n")
     val names = SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      // lazy sorts: an eager presentation-sort checkpoint would EXECUTE
+      // the query during the dump and truncate its plan to an RDD scan
+      val df = Queries.lazySorts(SparkEntry.queries(name)(spark, sfDir))
       sb.append(s"===== $name =====\n")
       sb.append(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
       sb.append("\n")

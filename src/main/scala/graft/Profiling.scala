@@ -155,7 +155,7 @@ object Profile {
       else SparkEntry.queries.keys.toSeq.sorted
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = Engine.session(master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Engine.session(Engine.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     // a/b switch for the drift gate (scripts/profile_drift.py): profiling
     // with broadcasts disabled must TRIP the shuffle_read_bytes gate

@@ -62,16 +62,17 @@ object Queries {
     * loss recoverability for speed — acceptable for a terminal
     * presentation sort whose driver would simply rerun the query. */
   private def sortedLarge(df: DataFrame, cols: Column*): DataFrame =
-    // "plain" = bare range sort, no checkpoint: the A/B escape hatch for
-    // harness sweeps AND the plan-inspection mode (an eager localCheckpoint
-    // executes the upstream at CONSTRUCTION time and truncates the dumped
-    // plan to an RDD scan — PlanDump sets the property so plans stay lazy
-    // and show the full upstream, ADVICE r17). The system property is the
-    // in-JVM override; the env var serves forked harness runs.
-    if (sys.props.get("spark.graft.sortMode")
-        .orElse(sys.env.get("SPARK_GRAFT_SORT_MODE")).contains("plain"))
-      df.orderBy(cols: _*)
+    if (lazySortsOn.value) df.orderBy(cols: _*)
     else df.localCheckpoint(eager = true).orderBy(cols: _*)
+
+  private val lazySortsOn = new scala.util.DynamicVariable(false)
+
+  /** Plan-inspection mode: queries BUILT inside `body` (on this thread)
+    * use a bare range sort for their O(N) presentation sorts, with no
+    * eager localCheckpoint. The checkpoint executes the upstream at
+    * construction time and truncates the plan to an RDD scan, hiding the
+    * upstream operators a plan dump exists to show (ADVICE r17). */
+  def lazySorts[T](body: => T): T = lazySortsOn.withValue(true)(body)
 
   // ── §2.2 projections / scalar expressions ─────────────────────────────
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** ROUNDING-BOUNDARY FRAGILITY SWEEP (VERDICT r17 #2, systemic follow-up
   * to the q170 hash flip): every gated query hashes `%.6g`/`round(·,k)`
@@ -14,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *
   *  1. ANALYTIC margin, PER SCALE: for each portable-rounding scale k
   *     the registry uses, re-runs the query with
-  *     `graft.rounding.bypass=k` (Rounding.portable passes scale-k
+  *     `Rounding.bypassing(k)` (Rounding.portable passes scale-k
   *     calls through unrounded; other scales round normally), and for
   *     every finite double of every column THAT ACTUALLY ROUNDS AT k
   *     (r19: established per column by bit-diffing the rounded result
@@ -121,20 +120,9 @@ object RoundingMargins {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("docs/ROUNDING_MARGINS.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Engine.cpus.toString
+    val spark = Engine.session(Engine.localMaster, shufflePartitions = Engine.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftFunctions.ensureRegistered(spark)
-    // harness handshake: Rounding.bypassAt refuses to engage (throws)
-    // without this, so a leaked bypass property can never silently
-    // strip rounding from a Verify/production JVM (ADVICE r18)
-    sys.props("graft.rounding.harness") = "1"
 
     val only: String => Boolean = sys.env.get("SPARK_GRAFT_ONLY") match {
       case Some(re) => val r = re.r; s => r.findFirstIn(s).isDefined
@@ -171,13 +159,8 @@ object RoundingMargins {
       // (checkpointed presentation sorts, trained-model chains,
       // reference-artifact collects run IN FULL here), so the discovery
       // pass costs up to one extra execution for that minority
-      graft.functions.Rounding.observed.clear()
-      sys.props("graft.rounding.record") = "1"
-      try q(spark, sfDir) finally sys.props.remove("graft.rounding.record")
-      val scales = {
-        import scala.jdk.CollectionConverters._
-        graft.functions.Rounding.observed.asScala.map(_.intValue).toSeq.sorted
-      }
+      val scales =
+        graft.functions.Rounding.recordingScales(q(spark, sfDir)).toSeq.sorted
       val jitterN = adjudicated.get(name).map(_._1)
         .getOrElse(JitterRows).toDouble
       var minMargin = Double.MaxValue
@@ -223,37 +206,35 @@ object RoundingMargins {
         val realRows = realDf.collect()
         val realBits = cols.indices.map(colBits(realRows, _))
         scales.foreach { k =>
-          sys.props("graft.rounding.bypass") = k.toString
-          try {
-            val bypassRows = q(spark, sfDir).collect()
-            cols.indices.foreach { i =>
-              val bypassed = bypassRows.iterator.map(_.get(i)).collect {
-                case d: java.lang.Double => d.doubleValue
-              }.toSeq
-              // rounds-at-k = raw multisets differ AND rounding the
-              // bypass values at k reproduces the real multiset
-              val roundedBypassBits = bypassed
-                .map(d => java.lang.Double.doubleToLongBits(portableK(d, k)))
-                .sorted
-              val changed = bypassed.nonEmpty &&
-                colBits(bypassRows, i) != realBits(i) &&
-                roundedBypassBits == realBits(i)
-              if (changed) bypassed.foreach { d =>
-                if (!d.isNaN && !d.isInfinite) {
-                  nDoubles += 1
-                  val dist = boundaryDistance(d, k)
-                  val boundU = jitterN * Eps * math.max(1.0, math.abs(d))
-                  val ratio = if (boundU == 0.0) Double.MaxValue else dist / boundU
-                  if (dist < minMargin) minMargin = dist
-                  if (ratio < minRatio) minRatio = ratio
-                  val p = math.pow(10.0, k.toDouble)
-                  if (dist < RuleExposureUlps *
-                      math.ulp(math.max(1.0, math.abs(d)) * p) / p)
-                    exposed += s"${cols(i)}@$k"
-                }
+          val bypassRows =
+            graft.functions.Rounding.bypassing(k)(q(spark, sfDir)).collect()
+          cols.indices.foreach { i =>
+            val bypassed = bypassRows.iterator.map(_.get(i)).collect {
+              case d: java.lang.Double => d.doubleValue
+            }.toSeq
+            // rounds-at-k = raw multisets differ AND rounding the
+            // bypass values at k reproduces the real multiset
+            val roundedBypassBits = bypassed
+              .map(d => java.lang.Double.doubleToLongBits(portableK(d, k)))
+              .sorted
+            val changed = bypassed.nonEmpty &&
+              colBits(bypassRows, i) != realBits(i) &&
+              roundedBypassBits == realBits(i)
+            if (changed) bypassed.foreach { d =>
+              if (!d.isNaN && !d.isInfinite) {
+                nDoubles += 1
+                val dist = boundaryDistance(d, k)
+                val boundU = jitterN * Eps * math.max(1.0, math.abs(d))
+                val ratio = if (boundU == 0.0) Double.MaxValue else dist / boundU
+                if (dist < minMargin) minMargin = dist
+                if (ratio < minRatio) minRatio = ratio
+                val p = math.pow(10.0, k.toDouble)
+                if (dist < RuleExposureUlps *
+                    math.ulp(math.max(1.0, math.abs(d)) * p) / p)
+                  exposed += s"${cols(i)}@$k"
               }
             }
-          } finally sys.props.remove("graft.rounding.bypass")
+          }
         }
       }
       if (nDoubles == 0) { minMargin = Double.MaxValue; minRatio = Double.MaxValue }

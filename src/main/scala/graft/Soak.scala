@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Scale soak harness (round-1 methodology, kept as a tool): replicate
   * sf0.1 N× with shifted keys into /dev/shm and run the coverage queries
-  * with the library's default scale configs (AQE on, 32 shuffle
-  * partitions, default splits) — catches output-grows-with-input and
-  * quadratic-blowup problems no fixed-SF benchmark can.
+  * with the library's default scale configs (the Default session profile
+  * on `local[SPARK_GRAFT_CPUS or nproc]`: AQE on, 32 shuffle partitions,
+  * default splits; `SPARK_LOCAL_DIRS` moves spill files) — catches
+  * output-grows-with-input and quadratic-blowup problems no fixed-SF
+  * benchmark can.
   * Usage: sbt "runMain graft.Soak [multiplier] [nameFilter]"  (default 10;
   * a filter of comma-separated substrings runs only queries matching any
   * of them, skipping table replication when none of the selected queries
@@ -17,18 +19,12 @@ object Soak {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val nameFilter = args.lift(1)
     val out = s"/dev/shm/graft-soak-x$mult"
-    val spark = SparkSession.builder().master("local[32]")
-      // env-overridable for scale-diagnosis runs: at ×100 sizes some legs
-      // carry ~1 GB of in-flight rows per task at 32 partitions (the
-      // linededup_scale 40M-doc step), and the partition count IS the
-      // per-task-density knob a cluster would turn
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SOAK_SHUF", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/dev/shm/spark-graft-soak-tmp")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // shuffle partitions are env-overridable for scale-diagnosis runs: at
+    // ×100 sizes some legs carry ~1 GB of in-flight rows per task at 32
+    // partitions (the linededup_scale 40M-doc step), and the partition
+    // count IS the per-task-density knob a cluster would turn
+    val spark = Engine.session(Engine.localMaster,
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SOAK_SHUF", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     // Zipfian-skew dedup scenario (no fixture involvement — the fixture
     // corpus has a CLOSED vocabulary where every shingle is frequent, so a

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -134,13 +134,7 @@ object SurveyCheck {
     val sf = sfDir.split('/').last
     val want = expected.getOrElse(sf,
       sys.error(s"no SURVEY §8 hashes recorded for '$sf'"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(Engine.localMaster, shufflePartitions = 8)
     spark.sparkContext.setLogLevel("WARN")
     val t = Tables(spark, sfDir)
     var bad = 0

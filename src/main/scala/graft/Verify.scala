@@ -79,14 +79,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(Engine.localMaster, shufflePartitions = Engine.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Schema-drift guard (see Tables.assertSchemasMatch): LOUD but
     // non-fatal — queries over undrifted tables still verify; queries

@@ -27,40 +27,30 @@ import org.apache.spark.sql.functions._
   */
 object Rounding {
 
-  /** DIAGNOSTIC ONLY (graft.RoundingMargins): when the JVM property
-    * `graft.rounding.bypass=<k>` is set at Column-CONSTRUCTION time,
-    * [[portable]] passes the unrounded expression through FOR CALLS AT
-    * SCALE k (other scales round normally), so the margin harness can
+  private val bypassScale = new scala.util.DynamicVariable[Option[Int]](None)
+  private val recording =
+    new scala.util.DynamicVariable[Option[java.util.Set[Integer]]](None)
+
+  /** DIAGNOSTIC ONLY (graft.RoundingMargins): columns BUILT inside `body`
+    * (on this thread) get [[portable]] calls AT SCALE k passed through
+    * unrounded (other scales round normally), so the margin harness can
     * observe the pre-round doubles of exactly the columns rounded at k
     * and measure their distance to THAT scale's boundaries — a scale-2
     * currency sum must not be judged against a scale-6 grid it never
-    * rounds to. Never set in production or verify paths — every gate's
-    * contract is the rounded value.
-    *
-    * FENCED (ADVICE r18): the bypass only engages when the harness
-    * handshake `graft.rounding.harness=1` is ALSO set (RoundingMargins
-    * sets both, always in a try/finally). A leaked/misdirected bypass
-    * property in any other JVM — one that also builds Verify or
-    * production plans — fails LOUDLY at plan-construction time instead
-    * of silently stripping every scale-k round from the gates. */
-  private def bypassAt(scale: Int): Boolean = {
-    val bp = sys.props.get("graft.rounding.bypass")
-    if (bp.isEmpty) return false
-    if (!sys.props.get("graft.rounding.harness").contains("1"))
-      throw new IllegalStateException(
-        "graft.rounding.bypass is set without graft.rounding.harness=1 — " +
-          "the bypass is a RoundingMargins-only diagnostic; refusing to " +
-          "build an unrounded plan in a non-harness JVM")
-    bp.contains(scale.toString)
-  }
+    * rounds to. The bypass ends with the block, however it exits, so it
+    * cannot leak into a Verify or production plan built afterwards. */
+  def bypassing[T](k: Int)(body: => T): T = bypassScale.withValue(Some(k))(body)
 
-  /** DIAGNOSTIC ONLY: with `graft.rounding.record=1`, every portable
-    * call registers its scale here at construction time, so the margin
-    * harness can learn which scales a query actually rounds at (and
-    * bypass-run only those) without executing anything. */
-  private[graft] val observed: java.util.Set[Integer] =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Boolean]())
+  /** DIAGNOSTIC ONLY: the scales of every [[portable]] call made while
+    * building `body`, so the margin harness can learn which scales a
+    * query actually rounds at (and bypass-run only those). Rounding is
+    * planned at construction time, so for most queries nothing runs. */
+  def recordingScales(body: => Any): Set[Int] = {
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    recording.withValue(Some(seen))(body)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.map(_.intValue).toSet
+  }
 
   /** ORDER-EXACT decimal sum (the q170/q179 integer-moment discipline
     * for currency columns, r18): for a column whose values are exact
@@ -94,9 +84,8 @@ object Rounding {
   /** `round(c, scale)` computed as DuckDB computes it (scaled-double). */
   def portable(c: Column, scale: Int): Column = {
     require(scale >= 0 && scale <= 9, s"unsupported rounding scale $scale")
-    if (sys.props.get("graft.rounding.record").contains("1"))
-      observed.add(scale)
-    if (bypassAt(scale)) return c
+    recording.value.foreach(_.add(scale))
+    if (bypassScale.value.contains(scale)) return c
     val p = math.pow(10.0, scale.toDouble)
     round(c * lit(p)) / lit(p)
   }

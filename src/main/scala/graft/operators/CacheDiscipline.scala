@@ -13,28 +13,42 @@ import org.apache.spark.storage.StorageLevel
   * done).
   *
   * The discipline — [[Graph]].hits' shape, factored out so every
-  * operator-level persist follows it: persist the RESULT, force it with
-  * one count (the single execution that fills every intermediate cache
-  * and drains it into the result), then unpersist the intermediates
-  * immediately. After the operator returns, the only cache entry left
-  * is the result the caller is about to consume — bounded by the
-  * operator's OUTPUT (runs, top-k, vocab pairs, gated rows), never by
-  * the exploded working set. CacheLifecycleSpec pins the contract:
-  * collecting any touched query leaves at most its result entries in
-  * `spark.sharedState.cacheManager`, never a Generate-bearing
-  * intermediate. */
+  * operator-level persist follows it: [[hold]] each intermediate, persist
+  * the RESULT, force it with one count (the single execution that fills
+  * every intermediate cache and drains it into the result), then release
+  * the intermediates immediately. After the operator returns, the only
+  * cache entry it leaves is the result the caller is about to consume —
+  * output-sized (runs, top-k, vocab pairs, gated rows), never the
+  * exploded working set; a corpus-scale output (quantileGate,
+  * ccnetBuckets) is still the caller's to unpersist when done.
+  * CacheLifecycleSpec pins the contract. An operator releases only
+  * caches it created: a frame the caller already persisted stays cached.
+  *
+  * Measured cost: 26–88 ms per affected leg (~3–11%, interleaved
+  * same-session A/B at sf0.1, best-of-4) — one extra action + the result
+  * cache write — against unbounded cache residency without it.
+  */
 private[operators] object CacheDiscipline {
-  /** Measured cost of the discipline (OptLab `ablife`, interleaved
-    * same-session A/B at sf0.1, best-of-4): 26–88 ms per affected leg
-    * (~3–11%) — one extra action + the result cache write — against
-    * unbounded cache residency without it. The `graft.ab.leak` sys-prop
-    * (dev-only, read per call so the probe can alternate in-session)
-    * restores the r20 leak behavior for exactly that A/B. */
-  def materialized(result: DataFrame, intermediates: DataFrame*): DataFrame = {
-    if (sys.props.get("graft.ab.leak").contains("1")) return result // A/B probe
-    val out = result.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    intermediates.foreach(_.unpersist(blocking = false))
+
+  /** `df`, persisted, and whether this hold created its cache entry
+    * (storage level NONE on entry) — [[release]] drops only such a one. */
+  final class Held private[CacheDiscipline] (val df: DataFrame, created: Boolean) {
+    def release(): Unit = if (created) { df.unpersist(blocking = false); () }
+  }
+
+  def hold(df: DataFrame): Held = {
+    val created = df.storageLevel == StorageLevel.NONE
+    new Held(df.persist(StorageLevel.MEMORY_AND_DISK), created)
+  }
+
+  /** Hold `result`, force it with one count, release `intermediates`. */
+  def materializedHeld(result: DataFrame, intermediates: Held*): Held = {
+    val out = hold(result)
+    out.df.count()
+    intermediates.foreach(_.release())
     out
   }
+
+  def materialized(result: DataFrame, intermediates: Held*): DataFrame =
+    materializedHeld(result, intermediates: _*).df
 }

@@ -67,8 +67,10 @@ object Cleaning {
     // both consume `df`, and when the caller hands in a derived chain
     // (q97's trained scores) the whole chain re-executed once per
     // consumer — plan-counted. One disk-spillable cache replaces the
-    // recompute; cold-timing harnesses clear it between reps.
-    val src = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // recompute; cold-timing harnesses clear it between reps. A frame the
+    // caller already persisted stays the caller's (CacheDiscipline).
+    val srcHeld = CacheDiscipline.hold(df)
+    val src = srcHeld.df
     // collision-proof internal names (the round-7 '__decontam_*' rule):
     // a user column literally named "__thr" must survive the gate intact
     val thr = src.select(score.as("__quantile_gate_s"))
@@ -81,7 +83,7 @@ object Cleaning {
       src.crossJoin(broadcast(thr))
         .filter(score >= col("__quantile_gate_thr"))
         .drop("__quantile_gate_thr"),
-      src)
+      srcHeld)
   }
 
   /** CCNet HEAD/MIDDLE/TAIL bucketing — the step CCNet actually runs on
@@ -112,7 +114,8 @@ object Cleaning {
     // Persisted (r20): same double-consumption as [[quantileGate]] —
     // q137 hands in the whole bigram-LM scoring chain, which the
     // threshold aggregate and the bucketing join each re-executed.
-    val src = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val srcHeld = CacheDiscipline.hold(df)
+    val src = srcHeld.df
     val thr = src
       .select(group.as("__ccb_g"), score.as("__ccb_s"))
       .groupBy("__ccb_g")
@@ -133,7 +136,7 @@ object Cleaning {
         .withColumn("bucket", bucket)
         .withColumn("keep", coalesce(col("bucket") =!= "tail", lit(false)))
         .drop("__ccb_g", "__ccb_t1", "__ccb_t2"),
-      src)
+      srcHeld)
   }
 
   /** Gopher-style quality rules (the published heuristic battery of Rae

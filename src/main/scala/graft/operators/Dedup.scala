@@ -24,14 +24,11 @@ import graft.functions.TextOps
   */
 object Dedup {
 
-  /** Force `result`, then release the intermediate caches its computation
-    * needed. The pair results are small relative to the corpus (that is
-    * the point of LSH/banding), so holding them cached is bounded; the
-    * intermediates (shingle/signature tables, linear in corpus size) are
-    * not. The returned DataFrame is persisted — callers that loop over
-    * many corpora should `.unpersist()` it when done. */
-  private def materialized(result: DataFrame, intermediates: DataFrame*): DataFrame =
-    CacheDiscipline.materialized(result, intermediates: _*)
+  // Operators here `hold` their corpus-sized intermediates (shingle and
+  // signature tables) and return `materialized(result, holds...)`: the
+  // pair result, small relative to the corpus, comes back persisted —
+  // callers that loop over many corpora should `.unpersist()` it.
+  import CacheDiscipline.{hold, materialized}
 
   /** Loan pattern for the persisted results of [[minHashNearDups]] /
     * [[simHashNearDups]] / [[ngramJaccard]]: runs `f` over the pair table
@@ -246,8 +243,8 @@ object Dedup {
     // sigs feeds three plan branches (bands + both sides of the estimate
     // join); persist so the per-row md5 signature loop — the expensive
     // part — executes once, not three times
-    val sigs = minHashSignaturesNative(docs, id, text, shingleN, numHashes)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sigsHeld = hold(minHashSignaturesNative(docs, id, text, shingleN, numHashes))
+    val sigs = sigsHeld.df
     val cand = candidatePairs(lshBands(sigs, numHashes, bands))
     val sa = sigs.select(col("doc_id").as("da"), col("sig").as("sa"))
     val sb = sigs.select(col("doc_id").as("db"), col("sig").as("sb"))
@@ -255,7 +252,7 @@ object Dedup {
       .select(col("da"), col("db"),
         estimatedJaccard(col("sa"), col("sb"), numHashes).as("est"))
       .filter(col("est") >= threshold)
-    materialized(pairs, sigs)
+    materialized(pairs, sigsHeld)
   }
 
   /** INCREMENTAL near-dup detection — the operation a production corpus
@@ -298,8 +295,8 @@ object Dedup {
       threshold: Double = 0.5): (DataFrame, DataFrame) = {
     // new-batch signatures feed four branches (bands, both estimate join
     // sides, the returned union); persist for the pair materialization
-    val newSigs = minHashSignaturesNative(newBatch, id, text, shingleN, numHashes)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val newSigsHeld = hold(minHashSignaturesNative(newBatch, id, text, shingleN, numHashes))
+    val newSigs = newSigsHeld.df
     // RE-INGEST resolution: a batch id already present in the corpus
     // table (a re-crawled page) supersedes its old signature — otherwise
     // the union below would carry two rows per id, fanning every
@@ -334,7 +331,7 @@ object Dedup {
     // convention of this file): consuming updatedSignatures recomputes
     // the new batch's signatures once — one map-only pass over the SMALL
     // side, cheaper than a dangling cache entry nobody owns.
-    (materialized(pairs, newSigs), allSigs)
+    (materialized(pairs, newSigsHeld), allSigs)
   }
 
   /** 32-bit SimHash per document over its shingle set, SQL-composed form
@@ -367,7 +364,8 @@ object Dedup {
     require(bits == 32 || bits == 64, s"bits must be 32 or 64, got $bits")
     // the simhash table is tiny (one long per doc) but its lineage — the
     // full shingle+bit pipeline — feeds both join sides; persist it
-    val hashes = hashesIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val hashesHeld = hold(hashesIn)
+    val hashes = hashesHeld.df
     val chunks = maxDist + 1
     val bitsPer = bits / chunks // 8-bit chunks for 32/maxDist=3; 16 for 64
     val mask = (1L << bitsPer) - 1L
@@ -383,7 +381,7 @@ object Dedup {
       .select(col("da"), col("db"), expr("bit_count(sha ^ shb)").cast("long").as("dist"))
       .filter(col("dist") <= maxDist)
       .distinct()
-    materialized(pairs, hashes)
+    materialized(pairs, hashesHeld)
   }
 
   /** Exact n-gram Jaccard via PREFIX FILTERING (the PPJoin-family
@@ -419,7 +417,8 @@ object Dedup {
     * wins on this data. */
   def ngramJaccardPrefix(shinglesIn: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    val shingles = shinglesIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val shinglesHeld = hold(shinglesIn)
+    val shingles = shinglesHeld.df
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("w")
     val ranked = shingles
@@ -447,7 +446,7 @@ object Dedup {
       .select(col("da"), col("db"),
         (col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))).as("jacc"))
       .filter(col("jacc") >= threshold)
-    materialized(pairs, shingles)
+    materialized(pairs, shinglesHeld)
   }
 
   /** Exact n-gram Jaccard over an inverted-index join: only pairs sharing
@@ -455,7 +454,8 @@ object Dedup {
   def ngramJaccard(shinglesIn: DataFrame, threshold: Double): DataFrame = {
     // shingles feed the size aggregate and both sides of the inverted-index
     // join; persist to avoid recomputing the explode+distinct three times
-    val shingles = shinglesIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val shinglesHeld = hold(shinglesIn)
+    val shingles = shinglesHeld.df
     val sz = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = shingles.select(col("doc_id").as("da"), col("w"))
     val b = shingles.select(col("doc_id").as("db"), col("w").as("wb"))
@@ -467,7 +467,7 @@ object Dedup {
       .select(col("da"), col("db"),
         (col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))).as("jacc"))
       .filter(col("jacc") >= threshold)
-    materialized(pairs, shingles)
+    materialized(pairs, shinglesHeld)
   }
 
   /** CONTAINMENT near-dup — Broder's second resemblance measure,
@@ -485,7 +485,8 @@ object Dedup {
     * Returns (da, db, i, na, nb, cab, cba) with da < db, unrounded. */
   def ngramContainment(shinglesIn: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    val shingles = shinglesIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val shinglesHeld = hold(shinglesIn)
+    val shingles = shinglesHeld.df
     val sz = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val a = shingles.select(col("doc_id").as("da"), col("w"))
     val b = shingles.select(col("doc_id").as("db"), col("w").as("wb"))
@@ -498,7 +499,7 @@ object Dedup {
         (col("i") * lit(1.0) / col("na")).as("cab"),
         (col("i") * lit(1.0) / col("nb")).as("cba"))
       .filter(greatest(col("cab"), col("cba")) >= threshold)
-    materialized(pairs, shingles)
+    materialized(pairs, shinglesHeld)
   }
 
   /** [[ngramContainment]] with the stop-shingle guard the uncapped form
@@ -527,8 +528,9 @@ object Dedup {
   def ngramContainmentCapped(shinglesIn: DataFrame, threshold: Double, dfCap: Long): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
     require(dfCap >= 1, s"dfCap must be >= 1, got $dfCap")
-    val shingles = shinglesIn.persist(StorageLevel.MEMORY_AND_DISK)
-    materialized(containmentCappedPairs(shingles, threshold, dfCap), shingles)
+    val shinglesHeld = hold(shinglesIn)
+    val shingles = shinglesHeld.df
+    materialized(containmentCappedPairs(shingles, threshold, dfCap), shinglesHeld)
   }
 
   /** The unmaterialized pair plan of [[ngramContainmentCapped]] —
@@ -623,7 +625,8 @@ object Dedup {
   def ngramJaccardCapped(shinglesIn: DataFrame, threshold: Double, dfCap: Long): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
     require(dfCap >= 1, s"dfCap must be >= 1, got $dfCap")
-    val shingles = shinglesIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val shinglesHeld = hold(shinglesIn)
+    val shingles = shinglesHeld.df
     val rare = shingles
       .groupBy("w").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
@@ -647,7 +650,7 @@ object Dedup {
       .select(col("da"), col("db"),
         (col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))).as("jacc"))
       .filter(col("jacc") >= threshold)
-    materialized(pairs, shingles)
+    materialized(pairs, shinglesHeld)
   }
 
   /** Sorted-distinct-token fingerprint (md5) — collapses permuted /
@@ -1173,8 +1176,8 @@ object Dedup {
     // four full explodes of the corpus in the dfCap plan (plan-counted,
     // r20). One disk-spillable cache of the shingle table replaces
     // three recomputes; Bench's cold reps clear it between runs.
-    val sh = positionalShingles(docs, id, text, minRun, "doc_id", "pos")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shHeld = hold(positionalShingles(docs, id, text, minRun, "doc_id", "pos"))
+    val sh = shHeld.df
     val kept = dfCap match {
       case Some(cap) =>
         val hot = sh.groupBy("w")
@@ -1189,7 +1192,7 @@ object Dedup {
     // shingle cache — the r21 lifecycle rule (CacheDiscipline)
     materialized(collapseRuns(
       a.join(b, "w").filter(col("da") < col("db")),
-      "da", "db", "pa", "pb", minRun, ("pos_a", "pos_b")), sh)
+      "da", "db", "pa", "pb", minRun, ("pos_a", "pos_b")), shHeld)
   }
 
   /** DUPLICATED-SPAN REPORT — the Lee et al. SUFFIX-ARRAY formulation's
@@ -1297,13 +1300,13 @@ object Dedup {
     // otherwise re-executes once per consumer. The span table is
     // bounded by the total flagged tokens; released on return per the
     // r21 lifecycle rule.
-    val spans = runs
+    val spansHeld = hold(runs
       .select(col("doc_id").as("__rs_id"),
         explode(sequence(col("pos_train"),
           col("pos_train") + col("run_len") - 1)).as("__rs_pos"))
       .distinct()
-      .withColumn("__rs_cov", lit(1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__rs_cov", lit(1)))
+    val spans = spansHeld.df
     val affected = spans.select("__rs_id").distinct()
     val toks = train
       .select(id.as("__rs_id"), TextOps.tokens(text).as("__rs_toks"))
@@ -1321,7 +1324,7 @@ object Dedup {
             array_sort(collect_list(when(col("__rs_cov").isNull,
               struct(col("__rs_pos"), col("__rs_tok"))))),
             _.getField("__rs_tok")), " ").as("text_clean")),
-      spans)
+      spansHeld)
   }
 
   /** WINNOWING document fingerprints (Schleimer/Wilkerson/Aiken 2003 —
@@ -1467,10 +1470,8 @@ object Dedup {
     // both consume the map-side explode, which the plan otherwise
     // executes twice (plan-counted). The window form consumes lines
     // exactly once — no cache, no change.
-    val lines =
-      if (hotKeySafe) lines0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else lines0
+    val linesHeld = if (hotKeySafe) Some(hold(lines0)) else None
+    val lines = linesHeld.fold(lines0)(_.df)
     val kept =
       if (hotKeySafe) {
         // associative escape hatch, two skew-free stages:
@@ -1517,7 +1518,7 @@ object Dedup {
     // hotKeySafe is the only path that persisted the line explode —
     // materialize the rebuilt (doc-sized) output and release it (r21
     // lifecycle rule); the window form stays fully lazy, unchanged
-    if (hotKeySafe) materialized(out, lines) else out
+    linesHeld.fold(out)(materialized(out, _))
   }
 
   /** BOILERPLATE line removal by document frequency — the RefinedWeb rule
@@ -1600,8 +1601,8 @@ object Dedup {
     // reuse to dedupe — the plan executed the split+posexplode twice
     // (plan-counted). One disk-spillable cache replaces the recompute;
     // cold-timing harnesses clear it between reps.
-    val lines = explodedLines(docs, id, text, group, sep)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val linesHeld = hold(explodedLines(docs, id, text, group, sep))
+    val lines = linesHeld.df
     val boiler = boilerLinesOf(lines, minDocs)
     // broadcast LEFT join + keep flag rather than an anti join: the
     // kept/total counts and the reassembly then ride ONE line-keyed
@@ -1631,6 +1632,6 @@ object Dedup {
           coalesce(col("n_lines"), lit(0L)).as("n_lines"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"),
           coalesce(col("text_clean"), lit("")).as("text_clean")),
-      lines)
+      linesHeld)
   }
 }

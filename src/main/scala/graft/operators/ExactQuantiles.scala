@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** EXACT quantile edges as a DISTRIBUTED plan — a drop-in replacement for
   * `agg(percentile(v, array(fracs)))` that computes bit-identical edges
@@ -84,18 +83,24 @@ object ExactQuantiles {
     * not be distinct (an internal re-aggregate makes the contract
     * robust); weights must be positive counts. */
   def quantileEdgesWeighted(counts: DataFrame, value: Column, weight: Column,
-      fracs: Seq[Double], out: String): DataFrame = {
+      fracs: Seq[Double], out: String): DataFrame =
+    quantileEdgesHeld(counts, value, weight, fracs, out).df
+
+  /** [[quantileEdgesWeighted]] with its result cache's ownership, for an
+    * operator that releases the edge frame itself. */
+  private[operators] def quantileEdgesHeld(counts: DataFrame, value: Column,
+      weight: Column, fracs: Seq[Double], out: String): CacheDiscipline.Held = {
     require(fracs.nonEmpty, "quantileEdges needs at least one fraction")
     require(fracs.forall(p => p >= 0.0 && p <= 1.0),
       s"fractions must be in [0, 1], got $fracs")
-    val ranked = counts
+    val rankedHeld = CacheDiscipline.hold(counts
       .select(value.cast("double").as("__eq_v"), weight.cast("long").as("__eq_c"))
       .filter(col("__eq_v").isNotNull)
       .groupBy("__eq_v").agg(sum("__eq_c").as("__eq_c"))
       .repartitionByRange(col("__eq_v"))
       .sortWithinPartitions("__eq_v")
-      .withColumn("__eq_pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__eq_pid", spark_partition_id()))
+    val ranked = rankedHeld.df
     // partition-count-sized offsets (the Discretize step-3 idiom): the
     // single-partition windows below run over ~shuffle-partition rows
     val offs = ranked.groupBy("__eq_pid").agg(sum("__eq_c").as("__eq_pc"))
@@ -139,12 +144,12 @@ object ExactQuantiles {
     // class of cache that must not outlive its operator. Callers that
     // keep the returned frame may unpersist it when done (ksDriftBinned
     // does).
-    CacheDiscipline.materialized(
+    CacheDiscipline.materializedHeld(
       br.select(col("__eq_k"), edge.as("__eq_e"))
         .groupBy()
         .agg(array_sort(collect_list(struct(col("__eq_k"), col("__eq_e"))))
           .as("__eq_s"))
         .select(transform(col("__eq_s"), s => s.getField("__eq_e")).as(out)),
-      ranked)
+      rankedHeld)
   }
 }

@@ -129,12 +129,19 @@ object Pca {
     val agg = udaf(new graft.functions.CovarianceLongAggregator(dim),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
     val st = snapped.agg(agg(col("xs")).as("state"))
-    def cell(idx: Int): Column = element_at(col("state"), idx + 1)
-    val triangle = array((for { i <- 0 until dim; j <- i until dim } yield
-      struct(lit(i.toLong).as("i"), lit(j.toLong).as("j"),
-        cell(1 + i).as("sx"), cell(1 + j).as("sy"),
-        cell(graft.functions.CovarianceAggregator.triIndex(i, j, dim)).as("sxy"))): _*)
-    st.select(cell(0).as("n"), explode(triangle).as("t"))
+    // The triangle unfolds in-row through loops over i and j, so the
+    // expression is the same size at any dim: an array(struct(...))
+    // literal of dim·(dim+1)/2 cells grew the generated code with dim and
+    // ran Janino out of heap at dim 64.
+    def cell(pos: Column): Column = element_at(col("state"), pos) // 1-based
+    val triangle = flatten(transform(sequence(lit(0), lit(dim - 1)), i =>
+      transform(sequence(i, lit(dim - 1)), j =>
+        struct(i.cast("long").as("i"), j.cast("long").as("j"),
+          cell(i + 2).as("sx"), cell(j + 2).as("sy"),
+          // CovarianceAggregator.triIndex(i, j, dim) + 1; i·(i−1) is even
+          cell(lit(2 + dim) + i * dim - (i * (i - 1) / 2).cast("int") + (j - i))
+            .as("sxy")))))
+    st.select(cell(lit(1)).as("n"), explode(triangle).as("t"))
       .select(col("t.i").as("i"), col("t.j").as("j"), col("n"),
         col("t.sx").as("sx"), col("t.sy").as("sy"), col("t.sxy").as("sxy"))
   }

@@ -197,15 +197,15 @@ object TextAnalysis {
     // the dumped plan for two tables' worth of work. Caching the
     // bounded tables cuts it to one pass per explode.
     val toks = docs.select(explode(TextOps.tokens(text)).as("w"))
-    val uni = toks.groupBy("w").agg(count(lit(1)).as("cw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val uniHeld = CacheDiscipline.hold(toks.groupBy("w").agg(count(lit(1)).as("cw")))
+    val uni = uniHeld.df
     val nu = uni.agg(sum("cw").cast("double").as("nu"))
-    val pair = docs
+    val pairHeld = CacheDiscipline.hold(docs
       .select(explode(TextOps.shinglesNative(TextOps.tokens(text), 2)).as("bg"))
       .select(split(col("bg"), " ").getItem(0).as("w1"),
         split(col("bg"), " ").getItem(1).as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("n_ab"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("n_ab")))
+    val pair = pairHeld.df
     val nb = pair.agg(sum("n_ab").cast("double").as("nb"))
     // materialize the (vocab-sized) collocation table, release both
     // count caches (r21 lifecycle rule — CacheDiscipline)
@@ -217,7 +217,7 @@ object TextAnalysis {
         .withColumn("pmi",
           log(col("n_ab") * col("nu") * col("nu") / (col("nb") * col("c1") * col("c2"))))
         .select("w1", "w2", "n_ab", "pmi"),
-      uni, pair)
+      uniHeld, pairHeld)
   }
 
   /** DSIR importance weights (Data Selection via Importance Resampling,
@@ -1152,11 +1152,11 @@ object TextAnalysis {
     // weight join) and, being map-side, would otherwise re-split the
     // corpus once per consumer — the (doc_id, dl) table is two narrow
     // columns, the cheapest possible cache.
-    val dl = docs
+    val dlHeld = CacheDiscipline.hold(docs
       .select(id.as("doc_id"),
         size(filter(split(lower(text), " "), t => t =!= "")).cast("long").as("dl"))
-      .filter(col("dl") > 0L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("dl") > 0L))
+    val dl = dlHeld.df
     val stats = dl.agg(count(lit(1)).as("n_docs"), avg("dl").as("avgdl"))
     val qterms = queries.select(col("qid"), col("term")).distinct()
     val terms = broadcast(qterms.select("term").distinct())
@@ -1184,7 +1184,7 @@ object TextAnalysis {
       scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
         .select(col("qid"), col("doc_id"), col("score6"), col("n_terms"),
           col("rn").cast("long").as("rn")),
-      dl)
+      dlHeld)
   }
 
   /** COHEN'S KAPPA — chance-corrected agreement between two categorical

@@ -236,17 +236,16 @@ object TimeSeries {
     // sum of exact longs, so results are unchanged. The approx branch
     // keeps its mergeable one-pass sketch over raw rows (the 100 TB
     // default needs no distinct-value table at all).
-    val gv =
-      if (approxEdges) null
-      else base.groupBy("g", "v").agg(count(lit(1)).as("__ks_w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val gvHeld =
+      if (approxEdges) None
+      else Some(CacheDiscipline.hold(base.groupBy("g", "v").agg(count(lit(1)).as("__ks_w"))))
+    val gv = gvHeld.map(_.df).orNull
     val fracs = (1 until bins).map(k =>
       s"CAST($k AS DOUBLE) / $bins").mkString(", ")
-    val edges =
-      if (approxEdges)
-        base.agg(expr(s"approx_percentile(v, array($fracs), 10000)").as("__ks_e"))
-      else ExactQuantiles.quantileEdgesWeighted(gv, col("v"), col("__ks_w"),
-        (1 until bins).map(_.toDouble / bins), "__ks_e")
+    val edgesHeld = gvHeld.map(h => ExactQuantiles.quantileEdgesHeld(h.df, col("v"),
+      col("__ks_w"), (1 until bins).map(_.toDouble / bins), "__ks_e"))
+    val edges = edgesHeld.map(_.df).getOrElse(
+      base.agg(expr(s"approx_percentile(v, array($fracs), 10000)").as("__ks_e")))
     // The histogram is keyed (g, bin) — NOT `bins` unrolled sum(when)
     // columns, which planned fine at the gated bins<=32 but are the
     // q158 plan-size failure class at the documented 1000-bin default
@@ -350,7 +349,7 @@ object TimeSeries {
     // caches nothing). The guard semantics are unchanged: the eager
     // count executes the same raise_error dag a consumer would.
     if (approxEdges) out
-    else graft.operators.CacheDiscipline.materialized(out, gv, edges)
+    else CacheDiscipline.materialized(out, gvHeld.get, edgesHeld.get)
   }
 
   /** Shared KS-vs-reference dag: given a row's per-bin current counts

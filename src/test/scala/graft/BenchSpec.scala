@@ -54,4 +54,23 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.passesJson(Seq((2.23, 0.301), (1.49, 0.266))) ==
       "[[2.23,0.301],[1.49,0.266]]")
   }
+
+  test("--only parsing: named legs, reps default to 3, no flags means the full suite") {
+    assert(Bench.parseOnly(Nil).isEmpty)
+    assert(Bench.parseOnly(Seq("--only", "q01_project_math,q02_filter_flagmask")) ==
+      Some((Seq("q01_project_math", "q02_filter_flagmask"), 3)))
+    assert(Bench.parseOnly(Seq("--only", "q01_project_math", "--reps", "5")) ==
+      Some((Seq("q01_project_math"), 5)))
+  }
+
+  test("--only parsing rejects unknown legs, stray flags and --reps alone") {
+    val e = intercept[IllegalArgumentException](
+      Bench.parseOnly(Seq("--only", "q01_project_math,q999_nope")))
+    assert(e.getMessage.contains("q999_nope"))
+    intercept[IllegalArgumentException](Bench.parseOnly(Seq("--only")))
+    intercept[IllegalArgumentException](Bench.parseOnly(Seq("--interleave", "1")))
+    intercept[IllegalArgumentException](Bench.parseOnly(Seq("--reps", "2")))
+    intercept[IllegalArgumentException](
+      Bench.parseOnly(Seq("--only", "q01_project_math", "--reps", "0")))
+  }
 }

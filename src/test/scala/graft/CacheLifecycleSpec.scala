@@ -117,4 +117,41 @@ class CacheLifecycleSpec extends SparkSpec {
         col("l_extendedprice"), Seq(0.25, 0.5, 0.75), "e")
     }
   }
+
+  /** Runs `op` over `input` that the CALLER persisted first, and asserts
+    * the caller's cache survives the operator (ownership: an operator
+    * releases only caches it created). */
+  private def assertCallerCacheKept(label: String, input: DataFrame)(
+      op: DataFrame => DataFrame): Unit = {
+    cm.clearCache()
+    Tables.clearPairCache()
+    val owned = input.persist()
+    op(owned).unpersist(blocking = true)
+    assert(owned.storageLevel.useMemory || owned.storageLevel.useDisk,
+      s"$label unpersisted a cache its caller owns")
+    owned.unpersist(blocking = true)
+    assert(cm.isEmpty, s"$label: only the caller's cache should have remained")
+  }
+
+  test("quantileGate keeps a caller-persisted input cached") {
+    assertCallerCacheKept("quantileGate",
+      docs.select(col("doc_id"), length(col("text")).cast("double").as("s"))) {
+      Cleaning.quantileGate(_, col("s"), 0.75)
+    }
+  }
+
+  test("ccnetBuckets keeps a caller-persisted input cached") {
+    assertCallerCacheKept("ccnetBuckets",
+      docs.select(col("doc_id"), col("lang"),
+        length(col("text")).cast("double").as("s"))) {
+      Cleaning.ccnetBuckets(_, col("lang"), col("s"))
+    }
+  }
+
+  test("materialized operators keep a caller-persisted input cached (ngramJaccard)") {
+    assertCallerCacheKept("ngramJaccard",
+      Dedup.shingleSet(docs, col("doc_id"), col("text"), 3)) {
+      Dedup.ngramJaccard(_, 0.5)
+    }
+  }
 }

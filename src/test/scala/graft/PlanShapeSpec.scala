@@ -41,6 +41,17 @@ class PlanShapeSpec extends SparkSpec {
     }.getOrElse(fail(s"$name: expected a materialized result cache in the plan"))
   }
 
+  test("lazySorts: q01 builds with a bare range sort over its full upstream, no checkpoint") {
+    def checkpoints(df: DataFrame): Int = df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }.size
+    val lazyQ01 = Queries.lazySorts(Queries.q01(sf0001))
+    assert(checkpoints(lazyQ01) == 0, s"lazySorts must not checkpoint:\n${plan(lazyQ01)}")
+    assert(plan(lazyQ01).contains("FileScan"), s"the upstream scan must show:\n${plan(lazyQ01)}")
+    assert(checkpoints(Queries.q01(sf0001)) == 1,
+      "outside the block the presentation sort checkpoints as before")
+  }
+
   test("q02: the flag predicate reaches the parquet scan (PushedFilters)") {
     val p = q("q02_filter_flagmask")
     assert(p.contains("PushedFilters: [") && !p.contains("PushedFilters: []"),

@@ -51,4 +51,28 @@ class RoundingSpec extends SparkSpec {
     assert(builtin == Seq(0.29, 1.01),
       "Spark HALF_UP on the decimal repr rounds these up; DuckDB rounds them to 0.28 / 1.0")
   }
+
+  private val v = 0.123456789
+  private def r(scale: Int) = Rounding.portable(col("v"), scale)
+
+  test("bypassing(k) leaves scale-k rounds unrounded only for columns built inside its block") {
+    val (in2, in6) = Rounding.bypassing(2)((r(2), r(6)))
+    val row = Seq(v).toDF("v").select(in2, in6, r(2)).as[(Double, Double, Double)].head()
+    assert(row == ((v, 0.123457, 0.12)),
+      "inside: scale 2 bypassed, scale 6 still rounds; outside: scale 2 rounds")
+  }
+
+  test("bypassing restores normal rounding after its block throws") {
+    intercept[IllegalStateException] {
+      Rounding.bypassing(2) { r(2); throw new IllegalStateException("boom") }
+    }
+    assert(Seq(v).toDF("v").select(r(2)).as[Double].head() == 0.12)
+  }
+
+  test("recordingScales returns the scales a block rounds at, and nothing outside it") {
+    assert(Rounding.recordingScales { r(2); r(6); r(2) } == Set(2, 6))
+    assert(Rounding.recordingScales(col("v") + 1) == Set.empty)
+    assert(Rounding.recordingScales(Queries.lazySorts(Queries.q01(sf0001))) == Set(4, 6),
+      "q01 rounds amp at 6 and phase at 4")
+  }
 }

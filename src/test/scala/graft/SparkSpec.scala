@@ -5,37 +5,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate → one session per
-  * test JVM; sbt forks a single JVM for the whole test run). */
+  * test JVM; sbt forks a single JVM for the whole test run). The heap
+  * confs the shared JVM needs live in [[Engine.Profile.Test]]; the session
+  * is built when a suite is constructed, so it is the first one in the
+  * JVM and its static confs take effect. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // One JVM hosts every suite, and test code (unlike the mains) holds
-    // plans/broadcasts alive across hundreds of tiny queries. Two knobs
-    // keep the shared heap healthy for the whole run — TEST-ONLY, the
-    // production entry points don't set them:
-    //  - the codegen hash-agg fast map pins one unspillable 64 MiB page
-    //    per agg per task; thousands of micro-aggregations exhausted the
-    //    execution pool mid-suite (tasks livelock retrying the page
-    //    grant). The single-level UnsafeFixedWidthAggregationMap sizes
-    //    pages to spark.buffer.pageSize instead.
-    //  - the context cleaner's periodic GC defaults to 30 min, longer
-    //    than the suite — broadcast/RDD blocks from dropped plans were
-    //    never actually reclaimed.
-    //  - the default Tungsten page size is computed from heap/cores to
-    //    64 MiB here, so every broadcast hashed relation and agg map pins
-    //    a 64 MiB long[] for kilobytes of test data; hundreds of live
-    //    broadcasts exhaust the pool. 1 MiB pages bound each structure
-    //    at ~64× less.
-    .config("spark.buffer.pageSize", "1m")
-    .config("spark.sql.codegen.aggregate.map.twolevel.enabled", "false")
-    .config("spark.cleaner.periodicGC.interval", "1min")
-    .getOrCreate()
-
-  graft.plans.GraftFunctions.ensureRegistered(spark)
+  val spark: SparkSession =
+    Engine.session("local[4]", shufflePartitions = 4, profile = Engine.Profile.Test)
 
   lazy val sf0001: Tables = Tables(spark, "/root/testdata/sf0.001")
 }
