@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Canvas, ShadePlot}
@@ -218,7 +218,7 @@ object Cli {
     * every raster reads the cached projection, whose width is the pruned
     * axis set, not the table. Caller owns `projection.unpersist()`. */
   private[graft] def batchFrames(a: Args, spark: SparkSession)
-      : (org.apache.spark.sql.DataFrame, Seq[(Map[String, String], org.apache.spark.sql.DataFrame, PlotSpec)]) = {
+      : (DataFrame, Seq[(Map[String, String], DataFrame, PlotSpec)]) = {
     val df = sourceFrame(a, spark)
     val specs = a.plots.map(parsePlotOpts)
     def opt(p: Map[String, String], k: String): Option[String] = p.get(k).orElse(a.get(k))
@@ -285,10 +285,57 @@ object Cli {
     (projection, plotFrames)
   }
 
+  /** Every sink of one plot over ONE evaluation of its canvas-bounded
+    * `raster` (the reference rasterises once, then renders and saves that
+    * one aggregate). With a PNG, the rows are collected once — the
+    * renderers collect the whole raster anyway, so the driver holds
+    * nothing new — and wrapped as a local frame that the parquet `write`,
+    * the renderer and the returned cell count all read. Without one, the
+    * raster is written once and counted from the written files' footers,
+    * or counted directly when nothing is written. Deliberately no
+    * `persist()`: a cached raster measured slower and left more heap
+    * live. `render` draws the PNG and returns its progress note. */
+  private def sinks(raster: DataFrame, out: Option[String],
+      write: (DataFrame, String) => Unit,
+      render: Option[DataFrame => String]): (Long, Option[String]) = {
+    val spark = raster.sparkSession
+    render match {
+      case Some(draw) =>
+        val rows = raster.collect()
+        val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), raster.schema)
+        out.foreach(write(local, _))
+        (rows.length.toLong, Some(draw(local)))
+      case None =>
+        (out.fold(raster.count()) { dir =>
+          write(raster, dir)
+          spark.read.parquet(dir).count()
+        }, None)
+    }
+  }
+
+  /** The raster parquet of one plot: a single file. */
+  private def writeRaster(raster: DataFrame, dir: String): Unit =
+    raster.coalesce(1).write.mode("overwrite").parquet(dir)
+
+  /** The PNG renderer of one plot, as [[sinks]] takes it: the categorical
+    * composite for `--colour-by` (undecorated — callers reject a title),
+    * else the shaded raster, decorated when titled. */
+  private def pngRenderer(spec: PlotSpec, png: String, cmap: String,
+      title: Option[String], dpi: Option[Int]): DataFrame => String = { frame =>
+    if (spec.colourBy.nonEmpty) ShadePlot.writePngCategorical(frame, spec, png, dpi = dpi)
+    else title match {
+      case Some(t) => ShadePlot.writePngDecorated(frame, spec, png, cmap, t, dpi)
+      case None => ShadePlot.writePng(frame, spec, png, cmap, dpi)
+    }
+    s"; png: $png"
+  }
+
   /** Multi-plot batch (`--plot` given at least once): the reference's
     * main loop renders MANY plots per MS read; this is that shape — one
     * shared scan + persisted axis-dedup'd projection feeding every
-    * plot's raster, instead of one scan per `shadems` invocation.
+    * plot's raster, instead of one scan per `shadems` invocation. Each
+    * plot's raster is then evaluated once from the projection and feeds
+    * all of that plot's sinks ([[sinks]]).
     * Returns total raster cells across plots.
     *
     * `--jobs N` (reference `-j N` pool [U]) renders the batch's plots
@@ -307,33 +354,23 @@ object Cli {
     require(jobs >= 1, s"--jobs must be >= 1, got $jobs")
     val (projection, plotFrames) = batchFrames(a, spark)
     try {
-      def renderOne(p: Map[String, String],
-          raster: org.apache.spark.sql.DataFrame, spec: PlotSpec, i: Int): Long = {
-        val shaded =
-          if (spec.colourBy.isEmpty) ShadePlot.shade(raster, spec) else raster
-        p.get("out").foreach(dir =>
-          shaded.coalesce(1).write.mode("overwrite").parquet(dir))
-        p.get("png").foreach { png =>
-          val cm = p.getOrElse("cmap", a.get("cmap").getOrElse("fire"))
+      def renderOne(p: Map[String, String], raster: DataFrame, spec: PlotSpec, i: Int): Long = {
+        val render = p.get("png").map { png =>
+          val title = p.get("title").orElse(a.get("title"))
           // reject rather than silently drop the title (matches the
           // CLI's unsupported-combination philosophy, e.g. --iter+--plot);
           // a GLOBAL --title is rejected too — a mixed batch decorates
           // its non-categorical plots via per-plot title: keys instead
-          require(spec.colourBy.isEmpty ||
-              p.get("title").orElse(a.get("title")).isEmpty,
+          require(spec.colourBy.isEmpty || title.isEmpty,
             s"plot $i: title is not supported with colour-by: " +
               "(categorical renders are undecorated)")
-          val dpi = p.get("dpi").orElse(a.get("dpi")).map(_.toInt)
-          if (spec.colourBy.nonEmpty)
-            ShadePlot.writePngCategorical(raster, spec, png, dpi = dpi)
-          else p.get("title").orElse(a.get("title")) match {
-            case Some(t) => ShadePlot.writePngDecorated(shaded, spec, png, cm, t, dpi)
-            case None => ShadePlot.writePng(shaded, spec, png, cm, dpi)
-          }
+          pngRenderer(spec, png, p.getOrElse("cmap", a.get("cmap").getOrElse("fire")),
+            title, p.get("dpi").orElse(a.get("dpi")).map(_.toInt))
         }
-        val cells = shaded.count()
-        println(s"[cli] plot $i: $cells raster cells" +
-          p.get("png").map(f => s"; png: $f").getOrElse("") +
+        val shaded =
+          if (spec.colourBy.isEmpty) ShadePlot.shade(raster, spec) else raster
+        val (cells, pngNote) = sinks(shaded, p.get("out"), writeRaster, render)
+        println(s"[cli] plot $i: $cells raster cells" + pngNote.getOrElse("") +
           p.get("out").map(d => s"; raster: $d").getOrElse(""))
         cells
       }
@@ -442,7 +479,7 @@ object Cli {
     // (dynSpreadCat).
     if (a.flag("dynspread"))
       require(a.get("iter").isEmpty, "--dynspread is not supported with --iter")
-    def spreadIfAsked(raster: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    def spreadIfAsked(raster: DataFrame): DataFrame =
       if (!a.flag("dynspread")) raster
       else if (spec.colourBy.nonEmpty)
         graft.operators.Raster.dynSpreadCat(raster, canvas.width, canvas.height,
@@ -452,46 +489,32 @@ object Cli {
       else
         graft.operators.Raster.dynSpreadDensity(raster, canvas.width, canvas.height)
 
+    // each branch evaluates its raster once for all of its sinks ([[sinks]])
+    val cmap = a.get("cmap").getOrElse("fire")
+    val dpi = a.get("dpi").map(_.toInt)
     val (cells, pngNote) = a.get("iter") match {
       case Some(g) =>
         // one pass builds every group's raster; parquet and PNGs are both
-        // per-group outputs of the same grouped plan (reference: the
-        // --iter-* loop writes one PNG per field/scan/corr [U])
+        // per-group outputs of it (reference: the --iter-* loop writes one
+        // PNG per field/scan/corr [U])
         val dir = a.req("out") // per-group output requires a directory sink
-        val grouped = ShadePlot.rasterByGroup(df, spec, expr(g))
-        // the grouped raster feeds two sinks (parquet + PNGs); persist so
-        // the input is scanned once — the raster itself is canvas-bounded
-        val both = a.get("png").isDefined
-        if (both) grouped.persist()
-        try {
-          grouped.write.partitionBy("grp").mode("overwrite").parquet(dir)
-          val pngs = a.get("png").map(t =>
-            ShadePlot.writePngPerGroup(grouped, spec, t,
-              a.get("cmap").getOrElse("fire"), a.get("dpi").map(_.toInt)))
-          (spark.read.parquet(dir).count(),
-            pngs.map(ps => s"; pngs: ${ps.size} (${ps.headOption.getOrElse("")} …)"))
-        } finally if (both) { grouped.unpersist(blocking = false); () }
+        sinks(ShadePlot.rasterByGroup(df, spec, expr(g)), Some(dir),
+          (grouped, d) => grouped.write.partitionBy("grp").mode("overwrite").parquet(d),
+          a.get("png").map(t => grouped => {
+            val ps = ShadePlot.writePngPerGroup(grouped, spec, t, cmap, dpi)
+            s"; pngs: ${ps.size} (${ps.headOption.getOrElse("")} …)"
+          }))
       case None =>
-        val raster = spreadIfAsked(ShadePlot.raster(df, spec))
-        val shaded =
-          if (spec.colourBy.isEmpty) ShadePlot.shade(raster, spec) else raster
-        a.get("out").foreach(dir =>
-          shaded.coalesce(1).write.mode("overwrite").parquet(dir))
-        a.get("png").foreach { png =>
+        val render = a.get("png").map { png =>
           require(spec.colourBy.isEmpty || a.get("title").isEmpty,
             "--title is not supported with --colour-by " +
               "(categorical renders are undecorated)")
-          val dpi = a.get("dpi").map(_.toInt)
-          if (spec.colourBy.nonEmpty)
-            ShadePlot.writePngCategorical(raster, spec, png, dpi = dpi)
-          else a.get("title") match {
-            case Some(t) => ShadePlot.writePngDecorated(shaded, spec, png,
-              a.get("cmap").getOrElse("fire"), t, dpi)
-            case None => ShadePlot.writePng(shaded, spec, png,
-              a.get("cmap").getOrElse("fire"), dpi)
-          }
+          pngRenderer(spec, png, cmap, a.get("title"), dpi)
         }
-        (shaded.count(), a.get("png").map(p => s"; png: $p"))
+        val raster = spreadIfAsked(ShadePlot.raster(df, spec))
+        val shaded =
+          if (spec.colourBy.isEmpty) ShadePlot.shade(raster, spec) else raster
+        sinks(shaded, a.get("out"), writeRaster, render)
     }
     println(s"[cli] $cells raster cells" +
       pngNote.getOrElse("") +

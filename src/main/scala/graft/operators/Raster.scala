@@ -77,10 +77,13 @@ object Raster {
     * by count alone (ties share a shade). The window is global but runs over
     * at most `width × height` rows — a post-aggregation raster, never the
     * raw data — so the single-partition sort is bounded by canvas size.
+    * With `within`, each value of that column gets its own CDF (one
+    * shading per group of a grouped raster).
     */
-  def shadeEqHist(raster: DataFrame, countCol: Column, out: String = "shade", scale: Int = 6): DataFrame =
-    raster.withColumn(out,
-      graft.functions.Rounding.portable(cume_dist().over(Window.orderBy(countCol)), scale))
+  def shadeEqHist(raster: DataFrame, countCol: Column, out: String = "shade", scale: Int = 6,
+      within: Option[Column] = None): DataFrame =
+    raster.withColumn(out, graft.functions.Rounding.portable(
+      cume_dist().over(Window.partitionBy(within.toSeq: _*).orderBy(countCol)), scale))
 
   /** GATE-grade integer sibling of [[shadeEqHist]] (r19 round-semantics
     * discipline, the q170 conversion applied here): the shade in

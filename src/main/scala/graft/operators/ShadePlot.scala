@@ -17,7 +17,11 @@ import org.apache.spark.sql.functions._
   * carries ≤ W×H×ncat rows no matter the input size); only the final
   * ≤W×H-cell raster is collected to render the PNG — the same boundary the
   * reference draws between datashader (distributed) and matplotlib
-  * (driver).
+  * (driver). Like the reference, which rasterises once and then renders
+  * and saves that one aggregate, [[graft.Cli]] evaluates a plot's raster
+  * once: with a PNG it collects the rows and hands the renderers below a
+  * local frame of them, which the raster parquet and the cell count read
+  * too. The renderers accept any frame of raster rows, local or not.
   */
 object ShadePlot {
 
@@ -55,18 +59,22 @@ object ShadePlot {
     pts.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Apply the spec's normalization, adding a `shade` column in [0, 1]. */
-  def shade(rasterDf: DataFrame, spec: PlotSpec): DataFrame = spec.norm match {
-    case "eq_hist" => Raster.shadeEqHist(rasterDf, col("c"))
-    case "log"     => withMaxNorm(rasterDf, log1p(col("c")))
-    case "cbrt"    => withMaxNorm(rasterDf, cbrt(col("c")))
-    case "linear"  => withMaxNorm(rasterDf, col("c").cast("double"))
+  /** Apply the spec's normalization, adding a `shade` column in [0, 1]
+    * rounded to 6 decimals. With `within`, each value of that column is
+    * normalized over its own cells only (the per-group rasters of
+    * [[writePngPerGroup]]); without it, over the whole raster. */
+  def shade(rasterDf: DataFrame, spec: PlotSpec,
+      within: Option[Column] = None): DataFrame = spec.norm match {
+    case "eq_hist" => Raster.shadeEqHist(rasterDf, col("c"), within = within)
+    case "log"     => withMaxNorm(rasterDf, log1p(col("c")), within)
+    case "cbrt"    => withMaxNorm(rasterDf, cbrt(col("c")), within)
+    case "linear"  => withMaxNorm(rasterDf, col("c").cast("double"), within)
     case other     => throw new IllegalArgumentException(s"unknown norm: $other")
   }
 
-  private def withMaxNorm(df: DataFrame, v: Column): DataFrame =
+  private def withMaxNorm(df: DataFrame, v: Column, within: Option[Column]): DataFrame =
     df.withColumn("shade", round(v / max(v).over(org.apache.spark.sql.expressions.Window
-      .partitionBy(lit(1))), 6))
+      .partitionBy(within.getOrElse(lit(1)))), 6))
 
   /** Per-group iteration (`--iter-field/-scan/…` [U]): one raster per
     * distinct group value, computed in a single pass by adding the group
@@ -116,25 +124,15 @@ object ShadePlot {
 
   /** One PNG per group from a [[rasterByGroup]] raster — the file-per-group
     * form of the reference's `--iter-*` plot loop [U], computed as ONE
-    * distributed plan: normalization is windowed per group (each group is
-    * shaded independently, exactly as separate plots would be), and only
-    * the ≤ W×H×ngroups raster ever reaches the driver. Intended for the
+    * distributed plan: [[shade]] normalizes within each group (each group
+    * is shaded exactly as a separate plot of it would be), and only the
+    * ≤ W×H×ngroups raster ever reaches the driver. Intended for the
     * reference's iteration axes (fields/scans/corrs — low cardinality);
     * the collect is bounded by canvas size × group count, never data size.
     * Returns the written paths (one per group, sorted by group value). */
   def writePngPerGroup(grouped: DataFrame, spec: PlotSpec, template: String,
       cmap: String = "fire", dpi: Option[Int] = None): Seq[String] = {
-    import org.apache.spark.sql.expressions.Window
-    val byGrp = Window.partitionBy(col("grp"))
-    val shadeCol = spec.norm match {
-      case "eq_hist" => cume_dist().over(byGrp.orderBy(col("c")))
-      case "log"     => log1p(col("c")) / max(log1p(col("c"))).over(byGrp)
-      case "cbrt"    => cbrt(col("c")) / max(cbrt(col("c"))).over(byGrp)
-      case "linear"  => col("c").cast("double") / max(col("c").cast("double")).over(byGrp)
-      case other     => throw new IllegalArgumentException(s"unknown norm: $other")
-    }
-    val rows = grouped
-      .withColumn("shade", shadeCol)
+    val rows = shade(grouped, spec, within = Some(col("grp")))
       .select(coalesce(col("grp").cast("string"), lit("(null)")).as("grp"),
         col("xb"), col("yb"), col("shade"))
       .collect()

@@ -1,12 +1,175 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{avg, expr, lit, max}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.operators.{Canvas, ShadePlot}
+import graft.operators.ShadePlot.PlotSpec
 
 /** Drives the shadems-equivalent CLI end-to-end on fixture data. */
 class CliSpec extends SparkSpec {
 
   private def tmp(name: String) =
     Files.createTempDirectory("cli").resolve(name).toString
+
+  private val sf = "/root/testdata/sf0.001"
+  private def bytes(path: String): Array[Byte] = Files.readAllBytes(Paths.get(path))
+
+  /** A raster parquet's cells, one sorted string per row. */
+  private def cells(dir: String): Seq[String] =
+    spark.read.parquet(dir).collect().map(_.toSeq.mkString(",")).toSeq.sorted
+
+  /** How many times `body` reads the files of `table`: the distinct file
+    * scans of that table in the executed plans of its actions, looking
+    * through cached relations into the plan that built them (a cache is
+    * one scan however many actions read it). Listener events arrive
+    * asynchronously and in order, so a marked action after `body` tells
+    * when all of its events have been seen. */
+  private def tableScans(table: String)(body: => Unit): Int = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
+    val marker = "__scan_count_done"
+    @volatile var done = false
+    object aqe extends AdaptiveSparkPlanHelper
+    def scans(plan: SparkPlan): Seq[FileSourceScanExec] = aqe.collect(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => Seq(s)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+    }.flatten
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) done = true
+        else seen.synchronized { scans(qe.executedPlan).foreach(seen.add) }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(1).as(marker)).collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!done && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(done, "listener events did not arrive")
+      seen.synchronized(seen.size)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("one plot reads its source once for the range and once for the raster") {
+    val base = Seq("--dir", sf, "--table", "lineitem",
+      "-x", "l_quantity", "-y", "l_extendedprice", "--width", "32", "--height", "32")
+    def scansOf(extra: String*): Int = tableScans("lineitem") { Cli.run(base ++ extra, spark); () }
+    assert(scansOf("--png", tmp("p.png"), "--out", tmp("r")) == 2,
+      "single plot: one range scan, one raster scan")
+    assert(scansOf("--xmin", "0", "--xmax", "51", "--ymin", "900", "--ymax", "105000",
+      "--png", tmp("p.png"), "--out", tmp("r")) == 1, "all four bounds given: raster scan only")
+    assert(scansOf("--iter", "l_linestatus", "--png", tmp("i_{}.png"), "--out", tmp("i")) == 2,
+      "--iter: one range scan, one grouped raster scan")
+    val batch = tableScans("lineitem") {
+      Cli.run(Seq("--dir", sf, "--table", "lineitem", "--width", "32", "--height", "32",
+        "--plot", s"x:l_quantity;y:l_extendedprice;png:${tmp("b0.png")};out:${tmp("b0")}",
+        "--plot", s"x:l_discount;y:l_tax;norm:log;png:${tmp("b1.png")};out:${tmp("b1")}"), spark)
+      ()
+    }
+    assert(batch == 1, "a --plot batch reads the table once, into its projection")
+  }
+
+  test("collecting the raster once leaves the PNG, the raster cells and the count unchanged") {
+    Engine.open(spark, sf)
+    val li = spark.table("lineitem")
+    /** Renders `spec` from the uncollected frame, every sink evaluating
+      * the raster anew; returns its cell count. */
+    def reference(spec: PlotSpec, out: String, png: String, cmap: String = "fire"): Long = {
+      val raster = ShadePlot.raster(li, spec)
+      val shaded = if (spec.colourBy.isEmpty) ShadePlot.shade(raster, spec) else raster
+      shaded.coalesce(1).write.mode("overwrite").parquet(out)
+      if (spec.colourBy.nonEmpty) ShadePlot.writePngCategorical(shaded, spec, png)
+      else ShadePlot.writePng(shaded, spec, png, cmap)
+      shaded.count()
+    }
+    def auto(x: String, y: String, w: Int, h: Int) = Canvas.auto(li, expr(x), expr(y), w, h)
+    val cases: Seq[(String, Seq[String], PlotSpec)] = Seq(
+      ("count/eq_hist --conj",
+        Seq("-x", "l_quantity", "-y", "l_extendedprice", "--conj", "--width", "48", "--height", "40"),
+        PlotSpec(expr("l_quantity"), expr("l_extendedprice"),
+          auto("l_quantity", "l_extendedprice", 48, 40), conjugate = true)),
+      ("--ared mean",
+        Seq("-x", "l_discount", "-y", "l_quantity", "--aaxis", "l_tax", "--ared", "mean",
+          "--flag-col", "l_returnflag = 'R'", "--norm", "cbrt", "--width", "24", "--height", "24"),
+        PlotSpec(expr("l_discount"), expr("l_quantity"), auto("l_discount", "l_quantity", 24, 24),
+          reduction = Seq(avg(expr("l_tax")).as("ared")),
+          flagMask = Some(expr("l_returnflag = 'R'")), norm = "cbrt")),
+      ("--colour-by",
+        Seq("-x", "l_quantity", "-y", "l_extendedprice", "--colour-by", "l_linestatus",
+          "--xmin", "0", "--xmax", "51", "--ymin", "900", "--ymax", "105000",
+          "--width", "32", "--height", "32"),
+        PlotSpec(expr("l_quantity"), expr("l_extendedprice"),
+          Canvas(32, 32, (0.0, 51.0), (900.0, 105000.0)), colourBy = Some(expr("l_linestatus")))))
+    for ((name, argv, spec) <- cases) {
+      val (refOut, refPng) = (tmp("ref"), tmp("ref.png"))
+      val refCells = reference(spec, refOut, refPng)
+      val (out, png) = (tmp("out"), tmp("out.png"))
+      val got = Cli.run(Seq("--dir", sf, "--table", "lineitem", "--png", png, "--out", out) ++ argv, spark)
+      assert(java.util.Arrays.equals(bytes(png), bytes(refPng)), s"$name: PNG bytes differ")
+      assert(cells(out) == cells(refOut), s"$name: raster cells differ")
+      assert(got == spark.read.parquet(out).count() && got == refCells, s"$name: cell count $got")
+    }
+    // the sink subsets: raster only, PNG only, neither
+    val (argv, spec) = (cases.head._2, cases.head._3)
+    val (refOut, refPng) = (tmp("ref"), tmp("ref.png"))
+    val refCells = reference(spec, refOut, refPng)
+    val outOnly = tmp("outonly")
+    assert(Cli.run(Seq("--dir", sf, "--table", "lineitem", "--out", outOnly) ++ argv, spark) == refCells)
+    assert(cells(outOnly) == cells(refOut), "no --png: raster cells differ")
+    val pngOnly = tmp("pngonly.png")
+    assert(Cli.run(Seq("--dir", sf, "--table", "lineitem", "--png", pngOnly) ++ argv, spark) == refCells)
+    assert(java.util.Arrays.equals(bytes(pngOnly), bytes(refPng)), "no --out: PNG bytes differ")
+    assert(Cli.run(Seq("--dir", sf, "--table", "lineitem") ++ argv, spark) == refCells)
+
+    // a --plot batch: each plot as rendered alone from the table
+    val plots = Seq(
+      ("x:l_quantity;y:l_extendedprice;norm:log",
+        PlotSpec(expr("l_quantity"), expr("l_extendedprice"),
+          auto("l_quantity", "l_extendedprice", 40, 32), norm = "log")),
+      ("x:l_discount;y:l_tax;ared:max;aaxis:l_quantity;cmap:viridis",
+        PlotSpec(expr("l_discount"), expr("l_tax"), auto("l_discount", "l_tax", 40, 32),
+          reduction = Seq(max(expr("l_quantity")).as("ared")))))
+    val outs = plots.indices.map(i => (tmp(s"b$i"), tmp(s"b$i.png")))
+    val total = Cli.run(Seq("--dir", sf, "--table", "lineitem", "--width", "40", "--height", "32") ++
+      plots.zip(outs).flatMap { case ((p, _), (o, png)) => Seq("--plot", s"$p;out:$o;png:$png") }, spark)
+    plots.zip(outs).zipWithIndex.foreach { case (((p, spec), (o, png)), i) =>
+      val (refOut, refPng) = (tmp("ref"), tmp("ref.png"))
+      reference(spec, refOut, refPng, if (p.contains("viridis")) "viridis" else "fire")
+      assert(java.util.Arrays.equals(bytes(png), bytes(refPng)), s"batch plot $i: PNG bytes differ")
+      assert(cells(o) == cells(refOut), s"batch plot $i: raster cells differ")
+    }
+    assert(total == outs.map { case (o, _) => spark.read.parquet(o).count() }.sum)
+  }
+
+  test("--iter PNGs equal the single-plot render of each group") {
+    def bounds(xmax: Int, w: Int, h: Int) = Seq("-x", "l_quantity", "-y", "l_extendedprice",
+      "--xmin", "0", "--xmax", s"$xmax", "--ymin", "900", "--ymax", "105000",
+      "--width", s"$w", "--height", s"$h")
+    // the 3-cell canvas puts an eq_hist shade at exactly 1/3, where the
+    // 6-decimal rounding moves the fire colormap's red channel 255 → 254
+    for ((norm, bounds) <- Seq(("eq_hist", bounds(51, 24, 24)), ("log", bounds(51, 24, 24)),
+        ("eq_hist", bounds(75, 3, 1)))) {
+      val (out, tmpl) = (tmp("iter"), tmp("iter_{}.png"))
+      val got = Cli.run(Seq("--dir", sf, "--table", "lineitem", "--norm", norm,
+        "--iter", "l_linestatus", "--png", tmpl, "--out", out) ++ bounds, spark)
+      assert(got == spark.read.parquet(out).count())
+      for (g <- Seq("F", "O")) {
+        val single = tmp(s"single_$g.png")
+        Cli.run(Seq("--dir", sf, "--table", "lineitem", "--norm", norm,
+          "--where", s"l_linestatus = '$g'", "--png", single) ++ bounds, spark)
+        assert(java.util.Arrays.equals(bytes(tmpl.replace("{}", g)), bytes(single)),
+          s"$norm: group $g PNG differs from its single plot")
+      }
+    }
+  }
 
   test("flagship: auto-ranged eq_hist plot with png + raster outputs") {
     val png = tmp("plot.png")
