@@ -681,7 +681,7 @@ object PipelineQueries {
     * weights` entry and times the consumers against the warm memo;
     * [[Tables.clearPairCache]] drops it for cold reps. */
   def sharedClassifierWeights(t: Tables): Array[Double] =
-    Tables.memoScalar(t.spark, t.dir, "clf_w4") { () =>
+    Tables.memo(t.spark, t.dir, "clf_w4") { () =>
       val (feats, y) = classifierFeatures
       TextAnalysis.logisticTrain(t.documents, feats, y, iters = 4, lr = 0.5)
     }
@@ -697,7 +697,7 @@ object PipelineQueries {
     * and both consumers warm; [[Tables.clearPairCache]] drops it for
     * cold reps. */
   def sharedBpeMerges8(t: Tables): Seq[graft.operators.BpeTrain.Merge] =
-    Tables.memoScalar(t.spark, t.dir, "bpe_merges8") { () =>
+    Tables.memo(t.spark, t.dir, "bpe_merges8") { () =>
       graft.operators.BpeTrain.learnMergesBatched(t.documents, col("text"), 8)
     }
 
@@ -1237,20 +1237,18 @@ object PipelineQueries {
       .transform(sortedSmall(_, col("doc_id")))
 
   /** q107: containment near-dup
-    * ([[graft.operators.Dedup.ngramContainmentCapped]]) — subset-
-    * duplication detection at max-directional containment ≥ 0.8 over
-    * 3-shingles; reports both directions so the gate pins the asymmetry
-    * (which side is the contained one). Gates the df-capped form (stop
-    * shingles with df > 50 anti-joined out of the candidate index, exact
-    * split-count ratios — the q145 stop-shingle discipline): the
-    * uncapped [[graft.operators.Dedup.ngramContainment]] is latently
-    * quadratic on a Zipf-head shingle and stays in-tree as the
-    * cross-check sibling (DedupSpec pins bit-equality on corpora where
-    * no shingle exceeds the cap — which includes this fixture, so the
-    * gated rows are identical to the uncapped form's). */
+    * ([[graft.operators.Dedup.ngramContainment]]) — subset-duplication
+    * detection at max-directional containment ≥ 0.8 over 3-shingles;
+    * reports both directions so the gate pins the asymmetry (which side
+    * is the contained one). Gates the df-capped form (stop shingles with
+    * df > 50 anti-joined out of the candidate index, exact split-count
+    * ratios — the q145 stop-shingle discipline): the uncapped join is
+    * latently quadratic on a Zipf-head shingle. No fixture shingle
+    * exceeds the cap, so the gated rows are the uncapped form's
+    * (DedupSpec pins bit-equality). */
   def q107(t: Tables): DataFrame =
-    Dedup.ngramContainmentCapped(
-        Dedup.shingleSet(t.documents, col("doc_id"), col("text"), 3), 0.8, 50L)
+    Dedup.ngramContainment(
+        Dedup.shingleSet(t.documents, col("doc_id"), col("text"), 3), 0.8, Some(50L))
       .select(col("da"), col("db"), col("i"), col("na"), col("nb"),
         Rounding.portable(col("cab"), 6).as("cab"),
         Rounding.portable(col("cba"), 6).as("cba"))

@@ -46,7 +46,7 @@ object Soak {
       "jaccard_skew_uncapped" -> ((t: Tables) =>
         graft.operators.Dedup.ngramJaccard(skewShingles(t), 0.9)),
       "jaccard_skew_dfcap" -> ((t: Tables) =>
-        graft.operators.Dedup.ngramJaccardCapped(skewShingles(t), 0.9, dfCap = 100L)))
+        graft.operators.Dedup.ngramJaccard(skewShingles(t), 0.9, dfCap = Some(100L))))
 
     // CC-variant a/b on the structures that separate them: one deep chain
     // (diameter = n, stresses round count) plus one max-degree hub
@@ -164,7 +164,7 @@ object Soak {
     // table and inflates the dfcap number the a/b comparison relies on
     if (qs.exists(_._1 == "jaccard_skew_dfcap")) {
       val got = graft.operators.Dedup
-        .ngramJaccardCapped(skewShingles(t), 0.9, dfCap = 100L).count()
+        .ngramJaccard(skewShingles(t), 0.9, dfCap = Some(100L)).count()
       require(got == skewN / 2, s"dfcap recall broke: $got of ${skewN / 2} twin pairs")
     }
     qs.foreach { case (_, q) => q(t).collect() } // warm (JIT/codegen)

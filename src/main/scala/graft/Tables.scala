@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -151,60 +151,45 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+  private val memoCache =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
 
   /** Shared (session, dir, kind)-keyed memo for suite-level derived
-    * tables. Resilient to `catalog.clearCache()` (a handle whose persist
-    * was cleared externally is discarded and rebuilt), and self-evicting:
-    * entries belonging to a STOPPED SparkSession are purged on every
-    * call, so a long-lived JVM that churns sessions (test suites) cannot
-    * leak stopped sessions' DataFrames through this map. */
-  private def memo(spark: SparkSession, dir: String, kind: String)(
-      build: () => DataFrame): DataFrame = pairCache.synchronized {
+    * inputs: the persisted tables above and driver-resident values such
+    * as [[graft.PipelineQueries.sharedClassifierWeights]]. A DataFrame
+    * value is valid while its storage level is not NONE, so a handle
+    * whose persist was cleared externally (`catalog.clearCache()`) is
+    * discarded and rebuilt; any other value is always valid. Entries of
+    * a STOPPED SparkSession are purged on every call, so a long-lived
+    * JVM that churns sessions (test suites) cannot leak them. */
+  def memo[T <: AnyRef](spark: SparkSession, dir: String, kind: String)(
+      build: () => T): T = memoCache.synchronized {
     // NOT ConcurrentHashMap.compute: the components build re-enters this
     // memo for its pair-table input, and compute() is non-reentrant
     // (recursive-update). A monitor is reentrant, and still gives the
     // build-once-per-key guarantee across threads.
-    pairCache.keySet.forEach { k =>
-      if (k._1.sparkContext.isStopped) { pairCache.remove(k); () }
+    memoCache.keySet.forEach { k =>
+      if (k._1.sparkContext.isStopped) { memoCache.remove(k); () }
     }
     val key = (spark, dir, kind)
-    val existing = pairCache.get(key)
-    if (existing != null &&
-        existing.storageLevel != org.apache.spark.storage.StorageLevel.NONE) existing
-    else { val built = build(); pairCache.put(key, built); built }
-  }
-
-  /** Driver-side twin of [[memo]] for SMALL shared results that live as
-    * plain Scala values (r20: the q135-family classifier weights — a
-    * 4-double array seven gated queries train identically; see
-    * [[graft.PipelineQueries.sharedClassifierWeights]]). Same
-    * (session, dir, kind) keying and stopped-session eviction; no
-    * storage-level resilience is needed because nothing Spark-managed
-    * backs the value. Cleared by [[clearPairCache]] so cold-timing
-    * harness reps rebuild it exactly like the DataFrame memos. */
-  private val scalarCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
-
-  def memoScalar[T <: AnyRef](spark: SparkSession, dir: String, kind: String)(
-      build: () => T): T = scalarCache.synchronized {
-    scalarCache.keySet.forEach { k =>
-      if (k._1.sparkContext.isStopped) { scalarCache.remove(k); () }
+    val existing = memoCache.get(key)
+    val valid = existing match {
+      case null => false
+      case ds: Dataset[_] => ds.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case _ => true
     }
-    val key = (spark, dir, kind)
-    val existing = scalarCache.get(key)
-    if (existing != null) existing.asInstanceOf[T]
-    else { val built = build(); scalarCache.put(key, built); built }
+    if (valid) existing.asInstanceOf[T]
+    else { val built = build(); memoCache.put(key, built); built }
   }
 
-  /** Release every cached derived table (see
-    * [[Tables.documentNearDupPairs]] / [[Tables.documentNearDupComponents]])
-    * and every [[memoScalar]] value. */
+  /** Release every memoized input: unpersist the DataFrame values, then
+    * drop all entries, so cold-timing harness reps rebuild each one. */
   def clearPairCache(): Unit = {
-    pairCache.values.forEach(df => { df.unpersist(blocking = false); () })
-    pairCache.clear()
-    scalarCache.clear()
+    memoCache.values.forEach {
+      case ds: Dataset[_] => ds.unpersist(blocking = false); ()
+      case _              => ()
+    }
+    memoCache.clear()
   }
 
   /** Per-directory memo of the probed `events.ts` physical layout (true =

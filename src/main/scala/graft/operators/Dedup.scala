@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextOps
@@ -15,8 +16,8 @@ import graft.functions.TextOps
   *  - SimHash: banded by the pigeonhole principle — a Hamming distance ≤ d
   *    pair must agree exactly on at least one of d+1 bit-chunks, so an
   *    equi-join on (chunk index, chunk value) has perfect recall;
-  *  - n-gram Jaccard: inverted-index join on shingles (pairs sharing no
-  *    shingle never meet).
+  *  - n-gram Jaccard / containment: inverted-index join on shingles
+  *    (pairs sharing no shingle never meet).
   *
   * Hash family: lexicographic MIN over `md5(seed || shingle)` hex strings —
   * one independent "random permutation" per seed, portable bit-for-bit
@@ -384,90 +385,18 @@ object Dedup {
     materialized(pairs, hashesHeld)
   }
 
-  /** Exact n-gram Jaccard via PREFIX FILTERING (the PPJoin-family
-    * optimization; Bayardo et al. "Scaling Up All Pairs Similarity
-    * Search", Xiao et al. PPJoin): identical result set to
-    * [[ngramJaccard]], far fewer candidate pairs.
-    *
-    * Principle: under any global total order on shingles (lexicographic
-    * here), if `jacc(A,B) >= t` then the required overlap is at least
-    * `ceil(t*max(|A|,|B|))`, and two sets with overlap >= α must share an
-    * element within their first `|X| - α + 1` elements — so indexing only
-    * each doc's PREFIX (its `|X| - ceil(t*|X|) + 1` smallest shingles, a
-    * valid relaxation per side) finds every qualifying pair. At t = 0.5
-    * the index halves per side (≈4× fewer candidate join rows); a size
-    * filter (`min >= t*max`, implied by jacc >= t) prunes survivors
-    * before the exact intersection count, which runs only on candidates.
-    *
-    * Shuffle shape: one window per doc (prefix ranks), the prefix
-    * equi-join, then two hash joins keyed on doc id for the exact
-    * recount — each stage keyed, no broadcast needed, AQE-splittable on
-    * skewed shingles. Equivalence with the full inverted-index form is
-    * asserted in DedupSpec on corpus and fixtures.
-    *
-    * Measured on the FIXTURES it loses (3.2 s vs 1.6 s at sf0.1; at soak
-    * ×10 its timed reps did not finish in a window where the full form
-    * completes in seconds): the synthetic corpus draws from a closed ~100-token
-    * vocabulary, so every trigram is shared by many documents and the
-    * lexicographic prefix prunes almost nothing while paying two extra
-    * joins — the same data property that sank q48's q-gram bound in
-    * round 2. On a natural (Zipfian-vocabulary) corpus the prefix carries
-    * the rare shingles and candidates collapse; that is the documented
-    * 100 TB path, while q33 keeps the simple inverted-index form that
-    * wins on this data. */
-  def ngramJaccardPrefix(shinglesIn: DataFrame, threshold: Double): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    val shinglesHeld = hold(shinglesIn)
-    val shingles = shinglesHeld.df
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy("w")
-    val ranked = shingles
-      .withColumn("r", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-    val prefix = ranked.filter(col("r") <= col("n") - ceil(lit(threshold) * col("n")) + 1)
-    val a = prefix.select(col("doc_id").as("da"), col("w"), col("n").as("na"))
-    val b = prefix.select(col("doc_id").as("db"), col("w").as("wb"), col("n").as("nb"))
-    val cand = a.join(b, col("w") === col("wb") && col("da") < col("db") &&
-        // size bound: jacc >= t ⇒ min(|A|,|B|) >= t·max(|A|,|B|)
-        col("nb") >= lit(threshold) * col("na") &&
-        col("na") >= lit(threshold) * col("nb"))
-      .select("da", "db").distinct()
-    // exact intersection count, candidates only
-    val ia = shingles.select(col("doc_id").as("da"), col("w"))
-    val ib = shingles.select(col("doc_id").as("db"), col("w"))
-    val sz = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand.join(ia, "da")
-      .join(ib, Seq("db", "w"))
-      .groupBy("da", "db").agg(count(lit(1)).as("i"))
-    val pairs = inter
-      .join(sz.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"),
-        (col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))).as("jacc"))
-      .filter(col("jacc") >= threshold)
-    materialized(pairs, shinglesHeld)
-  }
-
-  /** Exact n-gram Jaccard over an inverted-index join: only pairs sharing
-    * at least one shingle are compared (sharing count = intersection). */
-  def ngramJaccard(shinglesIn: DataFrame, threshold: Double): DataFrame = {
-    // shingles feed the size aggregate and both sides of the inverted-index
-    // join; persist to avoid recomputing the explode+distinct three times
-    val shinglesHeld = hold(shinglesIn)
-    val shingles = shinglesHeld.df
-    val sz = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = shingles.select(col("doc_id").as("da"), col("w"))
-    val b = shingles.select(col("doc_id").as("db"), col("w").as("wb"))
-    val inter = a.join(b, col("w") === col("wb") && col("da") < col("db"))
-      .groupBy("da", "db").agg(count(lit(1)).as("i"))
-    val pairs = inter
-      .join(sz.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"),
-        (col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))).as("jacc"))
-      .filter(col("jacc") >= threshold)
-    materialized(pairs, shinglesHeld)
+  /** Exact n-gram Jaccard, `|A∩B| / |A∪B|`, over the inverted-index join
+    * of [[ngramIntersections]]: only pairs sharing at least one indexed
+    * shingle are compared. Returns (da, db, jacc) with da < db and
+    * `jacc >= threshold`, unrounded. `dfCap` is the core's stop-shingle
+    * guard (exact scores; misses only all-stop-shingle pairs). */
+  def ngramJaccard(shinglesIn: DataFrame, threshold: Double,
+      dfCap: Option[Long] = None): DataFrame = {
+    require(threshold >= 0.0 && threshold <= 1.0, s"threshold $threshold out of [0,1]")
+    overIntersections(shinglesIn, dfCap)(
+      _.select(col("da"), col("db"),
+          (col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))).as("jacc"))
+        .filter(col("jacc") >= threshold))
   }
 
   /** CONTAINMENT near-dup — Broder's second resemblance measure,
@@ -479,178 +408,96 @@ object Dedup {
     * measure at any usable threshold. Emits each candidate pair with
     * BOTH directions, filtered on `max(cab, cba) ≥ threshold`; the
     * caller reads which side is the contained one from which direction
-    * is high. Same inverted-index join + doc-keyed size joins as
-    * [[ngramJaccard]] (one persisted shingle scan, every stage keyed —
-    * the df-capped candidate guard composes the same way if needed).
-    * Returns (da, db, i, na, nb, cab, cba) with da < db, unrounded. */
-  def ngramContainment(shinglesIn: DataFrame, threshold: Double): DataFrame = {
+    * is high. Same intersection core as [[ngramJaccard]]; at
+    * containment ≥ 0.8 the contained side shares nearly ALL its
+    * shingles, so the pairs a `dfCap` drops are corpus boilerplate (the
+    * [[fingerprint]] / [[boilerplateLines]] regime, not subset
+    * duplication). Returns (da, db, i, na, nb, cab, cba) with da < db,
+    * unrounded. */
+  def ngramContainment(shinglesIn: DataFrame, threshold: Double,
+      dfCap: Option[Long] = None): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    val shinglesHeld = hold(shinglesIn)
-    val shingles = shinglesHeld.df
-    val sz = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = shingles.select(col("doc_id").as("da"), col("w"))
-    val b = shingles.select(col("doc_id").as("db"), col("w").as("wb"))
-    val inter = a.join(b, col("w") === col("wb") && col("da") < col("db"))
-      .groupBy("da", "db").agg(count(lit(1)).as("i"))
-    val pairs = inter
-      .join(sz.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"), col("i"), col("na"), col("nb"),
-        (col("i") * lit(1.0) / col("na")).as("cab"),
-        (col("i") * lit(1.0) / col("nb")).as("cba"))
-      .filter(greatest(col("cab"), col("cba")) >= threshold)
-    materialized(pairs, shinglesHeld)
+    overIntersections(shinglesIn, dfCap)(
+      _.select(col("da"), col("db"), col("i"), col("na"), col("nb"),
+          (col("i") * lit(1.0) / col("na")).as("cab"),
+          (col("i") * lit(1.0) / col("nb")).as("cba"))
+        .filter(greatest(col("cab"), col("cba")) >= threshold))
   }
 
-  /** [[ngramContainment]] with the stop-shingle guard the uncapped form
-    * lacks: shingles with document frequency > `dfCap` are ANTI-JOINED out
-    * of the candidate-generating inverted index (each contributes df²
-    * candidate rows — one Zipf-head trigram shared by k docs is a k²
-    * join blow-up, the exact quadratic that makes the uncapped form a
-    * scale-killer on boilerplate-heavy corpora). Containment ratios stay
-    * EXACT over the full uncapped shingle sets via a split intersection
-    * count, `i = i_rare + i_stop`:
-    *  - `i_rare` falls out of the capped index self-join directly (one
-    *    row per shared rare shingle — no distinct, no recount);
-    *  - `i_stop` recounts ONLY the stop shingles, and only for pairs the
-    *    rare join already nominated — at most |candidates| × stop-
-    *    shingles-per-doc rows, keyed end to end.
-    * On a corpus where nothing exceeds the cap the stop side is an empty
-    * relation and the plan degenerates to [[ngramContainment]] plus one
-    * map-side-combined df aggregate — the guard costs ~nothing until the
-    * Zipf head it exists for actually appears. A qualifying pair is
-    * missed only if EVERY shared shingle has df > dfCap; at containment
-    * ≥ 0.8 the contained side shares nearly ALL its shingles, so a
-    * fully-stop-shingled overlap is corpus boilerplate by construction
-    * (the [[fingerprint]] / [[boilerplateLines]] regime, not
-    * subset-duplication). DedupSpec pins bit-equality with
-    * [[ngramContainment]] when no shingle exceeds the cap. */
-  def ngramContainmentCapped(shinglesIn: DataFrame, threshold: Double, dfCap: Long): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    require(dfCap >= 1, s"dfCap must be >= 1, got $dfCap")
+  /** Runs `measure` over the intersection core and returns its pairs
+    * materialized. The shingle table feeds the size aggregate, both index
+    * sides and (capped) the df aggregate, so it is held for the build. */
+  private def overIntersections(shinglesIn: DataFrame, dfCap: Option[Long])(
+      measure: DataFrame => DataFrame): DataFrame = {
     val shinglesHeld = hold(shinglesIn)
-    val shingles = shinglesHeld.df
-    materialized(containmentCappedPairs(shingles, threshold, dfCap), shinglesHeld)
+    materialized(measure(ngramIntersections(shinglesHeld.df, dfCap)), shinglesHeld)
   }
 
-  /** The unmaterialized pair plan of [[ngramContainmentCapped]] —
-    * package-private so PlanShapeSpec can gate the anti-join candidate
-    * guard before [[materialized]] hides the dataflow behind an
-    * InMemoryRelation. */
-  private[graft] def containmentCappedPairs(
-      shingles: DataFrame, threshold: Double, dfCap: Long): DataFrame = {
-    // the stop set is the Zipf HEAD — at most totalRows/dfCap distinct
-    // shingles and in practice a handful of boilerplate n-grams, so it
-    // broadcasts (the alternative SMJ anti-join would sort the whole
-    // shingle table just to subtract a dozen keys)
-    val stopAgg = shingles
-      .groupBy("w").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap)
-      .select("w")
-    // Data-adaptive degenerate plan (r21, guide §8 — use what the
-    // optimizer cannot know): on a corpus with NO over-cap shingle the
-    // stop relation is empty, yet the static plan still schedules the
-    // anti-join, the semi-join and interStop's three keyed stages over
-    // empty inputs — measured at sf0.1 as a third of q107's wall, pure
-    // stage-dispatch. One bounded count over the (caller-cached)
-    // shingle table decides it — the exact adjudication AQE would make
-    // from the same runtime statistic, and the df aggregate was already
-    // being computed for the broadcast. When the head is empty the
-    // capped result is BIT-EQUAL to [[ngramContainment]]'s plan
-    // (i_stop ≡ 0, rareIdx ≡ shingles — the DedupSpec pin); when it is
-    // not, the guarded plan runs exactly as before.
-    val nStop = stopAgg.count()
+  /** The set-similarity join core: every doc pair sharing at least one
+    * candidate-generating shingle, as (da, db, i, na, nb) with da < db,
+    * `i = |A∩B|` and `na`/`nb` the two set sizes — EXACT over the full
+    * shingle sets either way. Unmaterialized and package-private so
+    * PlanShapeSpec can gate its dataflow before [[materialized]] hides
+    * it behind an InMemoryRelation.
+    *
+    *  - `dfCap = None`: the plain inverted-index self-join (sharing count
+    *    = intersection) plus two doc-keyed size joins. Nothing runs while
+    *    the frame is built.
+    *  - `dfCap = Some(cap)`: the stop-shingle guard. A shingle shared by k
+    *    docs contributes k² candidate join rows, so one Zipf-head trigram
+    *    makes the plain join quadratic in corpus size. Shingles with
+    *    df > cap (the stop set) are ANTI-JOINED out of the candidate
+    *    index, and the intersection is a split count `i = i_rare +
+    *    i_stop`: `i_rare` falls out of the capped self-join (one row per
+    *    shared rare shingle), and `i_stop` intersects the two docs' stop
+    *    shingles, left-semi selected and carried per doc through the size
+    *    joins — no pair-keyed recount. A pair is missed only if EVERY
+    *    shared shingle has df > cap.
+    *
+    * Construction-time action: `Some(cap)` runs ONE bounded `collect()`
+    * of the stop set over the (held) shingle table while the frame is
+    * built. The stop set is the Zipf head (at most rows/cap shingles, the
+    * same driver-side bound a broadcast of it has), and it enters the
+    * plan as a broadcast local relation, so the df aggregate is not run
+    * again. An empty stop set would leave the guard's anti-join,
+    * semi-join and stop-set stages running over empty inputs, so the plan
+    * then degenerates to the `None` plan. The branch is frozen into the
+    * returned plan: it stays valid only while the input is unchanged.
+    * ROADMAP #2 owns removing this job. */
+  private[graft] def ngramIntersections(shingles: DataFrame, dfCap: Option[Long]): DataFrame = {
+    dfCap.foreach(c => require(c >= 1, s"dfCap must be >= 1, got $c"))
     val sz = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter =
-      if (nStop == 0) {
-        val a = shingles.select(col("doc_id").as("da"), col("w"))
-        val b = shingles.select(col("doc_id").as("db"), col("w").as("wb"))
-        a.join(b, col("w") === col("wb") && col("da") < col("db"))
-          .groupBy("da", "db").agg(count(lit(1)).as("i"))
-      } else {
-        val stop = broadcast(stopAgg)
-        val rareIdx = shingles.join(stop, Seq("w"), "left_anti")
-        val a = rareIdx.select(col("doc_id").as("da"), col("w"))
-        val b = rareIdx.select(col("doc_id").as("db"), col("w").as("wb"))
-        val interRare = a.join(b, col("w") === col("wb") && col("da") < col("db"))
-          .groupBy("da", "db").agg(count(lit(1)).as("i_rare"))
-        // stop-shingle contributions, recounted for nominated pairs only
-        val stopIdx = shingles.join(stop, Seq("w"), "left_semi")
-        val sa = stopIdx.select(col("doc_id").as("da"), col("w"))
-        val sb = stopIdx.select(col("doc_id").as("db"), col("w"))
-        val interStop = interRare.select("da", "db")
-          .join(sa, "da")
-          .join(sb, Seq("db", "w"))
-          .groupBy("da", "db").agg(count(lit(1)).as("i_stop"))
-        interRare
-          .join(interStop, Seq("da", "db"), "left_outer")
+    def sharedCount(idx: DataFrame): DataFrame = {
+      val a = idx.select(col("doc_id").as("da"), col("w"))
+      val b = idx.select(col("doc_id").as("db"), col("w").as("wb"))
+      a.join(b, col("w") === col("wb") && col("da") < col("db"))
+        .groupBy("da", "db").agg(count(lit(1)).as("i"))
+    }
+    val stopAgg = shingles.groupBy("w").agg(count(lit(1)).as("df"))
+    val stopRows = dfCap
+      .map(c => stopAgg.filter(col("df") > c).select("w").collect()) // the construction-time job
+      .filter(_.nonEmpty)
+    stopRows match {
+      case None =>
+        sharedCount(shingles)
+          .join(sz.select(col("doc_id").as("da"), col("n").as("na")), "da")
+          .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), "db")
+          .select(col("da"), col("db"), col("i"), col("na"), col("nb"))
+      case Some(rows) =>
+        val stop = broadcast(shingles.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), stopAgg.select("w").schema))
+        val stopSets = shingles.join(stop, Seq("w"), "left_semi")
+          .groupBy("doc_id").agg(collect_list("w").as("s"))
+        val sizes = sz.join(stopSets, Seq("doc_id"), "left_outer")
+          .select(col("doc_id"), col("n"), coalesce(col("s"),
+            array().cast(ArrayType(shingles.schema("w").dataType))).as("s"))
+        sharedCount(shingles.join(stop, Seq("w"), "left_anti"))
+          .join(sizes.select(col("doc_id").as("da"), col("n").as("na"), col("s").as("sa")), "da")
+          .join(sizes.select(col("doc_id").as("db"), col("n").as("nb"), col("s").as("sb")), "db")
           .select(col("da"), col("db"),
-            (col("i_rare") + coalesce(col("i_stop"), lit(0L))).as("i"))
-      }
-    inter
-      .join(sz.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"), col("i"), col("na"), col("nb"),
-        (col("i") * lit(1.0) / col("na")).as("cab"),
-        (col("i") * lit(1.0) / col("nb")).as("cba"))
-      .filter(greatest(col("cab"), col("cba")) >= threshold)
-  }
-
-  /** [[ngramJaccard]] with a document-frequency cap on the inverted index
-    * (the standard stop-shingle guard; Bayardo et al. §5 "Scaling Up All
-    * Pairs Similarity Search" use the same high-frequency-last ordering
-    * insight): at corpus scale a Zipfian head shingle shared by k docs
-    * contributes k² candidate join rows — one ubiquitous trigram ("in the
-    * end", boilerplate headers) makes the per-shingle join quadratic in
-    * corpus size. Capping is the cheap fix: shingles with df > `dfCap`
-    * are dropped from the CANDIDATE index only.
-    *
-    * Exactness contract (asserted in DedupSpec):
-    *  - every emitted pair carries its EXACT Jaccard — the intersection
-    *    recount below runs over the full uncapped shingle sets, keyed by
-    *    doc id (stop shingles count toward `i`, they just don't generate
-    *    candidates);
-    *  - a qualifying pair is missed only if EVERY shared shingle has
-    *    df > dfCap. When no shingle exceeds the cap the result is
-    *    identical to [[ngramJaccard]]. For near-dup thresholds (t ≥ 0.7,
-    *    dozens of shared shingles/doc) a pair sharing exclusively
-    *    corpus-head shingles is boilerplate by construction — the pairs a
-    *    df-cap drops are the ones a dedup pipeline mines with
-    *    [[fingerprint]] instead.
-    *
-    * Shuffle shape: df agg (one shuffle, map-side combined) + the capped
-    * inverted-index join + the same doc-keyed recount joins as
-    * [[ngramJaccardPrefix]] — every stage keyed, AQE-splittable, nothing
-    * broadcast-dependent. */
-  def ngramJaccardCapped(shinglesIn: DataFrame, threshold: Double, dfCap: Long): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0, s"threshold $threshold out of (0,1]")
-    require(dfCap >= 1, s"dfCap must be >= 1, got $dfCap")
-    val shinglesHeld = hold(shinglesIn)
-    val shingles = shinglesHeld.df
-    val rare = shingles
-      .groupBy("w").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap)
-      .select("w")
-    val indexed = shingles.join(rare, "w")
-    val a = indexed.select(col("doc_id").as("da"), col("w"))
-    val b = indexed.select(col("doc_id").as("db"), col("w").as("wb"))
-    val cand = a.join(b, col("w") === col("wb") && col("da") < col("db"))
-      .select("da", "db").distinct()
-    // exact intersection recount over the FULL shingle sets (cap applies
-    // to candidate generation only)
-    val ia = shingles.select(col("doc_id").as("da"), col("w"))
-    val ib = shingles.select(col("doc_id").as("db"), col("w"))
-    val sz = shingles.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand.join(ia, "da")
-      .join(ib, Seq("db", "w"))
-      .groupBy("da", "db").agg(count(lit(1)).as("i"))
-    val pairs = inter
-      .join(sz.select(col("doc_id").as("da"), col("n").as("na")), "da")
-      .join(sz.select(col("doc_id").as("db"), col("n").as("nb")), "db")
-      .select(col("da"), col("db"),
-        (col("i") * lit(1.0) / (col("na") + col("nb") - col("i"))).as("jacc"))
-      .filter(col("jacc") >= threshold)
-    materialized(pairs, shinglesHeld)
+            (col("i") + size(array_intersect(col("sa"), col("sb")))).as("i"),
+            col("na"), col("nb"))
+    }
   }
 
   /** Sorted-distinct-token fingerprint (md5) — collapses permuted /

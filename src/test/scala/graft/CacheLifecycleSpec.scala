@@ -154,4 +154,13 @@ class CacheLifecycleSpec extends SparkSpec {
       Dedup.ngramJaccard(_, 0.5)
     }
   }
+
+  test("the capped n-gram join keeps a caller-persisted input cached (binding dfCap)") {
+    val sh = Dedup.shingleSet(docs, col("doc_id"), col("text"), 3)
+    assert(!sh.groupBy("w").count().filter(col("count") > 2).isEmpty,
+      "dfCap = 2 must bind on this corpus, or the stop-set branch is not exercised")
+    assertCallerCacheKept("ngramContainment capped", sh) {
+      Dedup.ngramContainment(_, 0.8, Some(2L))
+    }
+  }
 }

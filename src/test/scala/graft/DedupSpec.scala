@@ -194,30 +194,12 @@ class DedupSpec extends SparkSpec {
     assert(got == reps.view.filterKeys(verts).toMap)
   }
 
-  test("prefix-filtered jaccard equals the full inverted-index form (corpus + fixtures)") {
-    def pairsOf(df: org.apache.spark.sql.DataFrame, t: Double) = {
-      val sh = Dedup.shingleSet(df, col("doc_id"), col("text"), 3)
-      val full = Dedup.withPairs(Dedup.ngramJaccard(sh, t))(
-        _.as[(Long, Long, Double)].collect().toSet)
-      val pref = Dedup.withPairs(Dedup.ngramJaccardPrefix(sh, t))(
-        _.as[(Long, Long, Double)].collect().toSet)
-      (full, pref)
-    }
-    for (t <- Seq(0.3, 0.5, 0.8)) {
-      val (full, pref) = pairsOf(corpus, t)
-      assert(pref == full, s"threshold $t diverged on the synthetic corpus")
-    }
-    val docs = Tables(spark, "/root/testdata/sf0.001").documents
-    val (full, pref) = pairsOf(docs, 0.5)
-    assert(full.nonEmpty && pref == full, "fixture divergence")
-  }
-
   test("df-capped jaccard: identical to uncapped when no shingle exceeds the cap") {
     def pairsOf(df: org.apache.spark.sql.DataFrame, t: Double, cap: Long) = {
       val sh = Dedup.shingleSet(df, col("doc_id"), col("text"), 3)
       val full = Dedup.withPairs(Dedup.ngramJaccard(sh, t))(
         _.as[(Long, Long, Double)].collect().toSet)
-      val capped = Dedup.withPairs(Dedup.ngramJaccardCapped(sh, t, cap))(
+      val capped = Dedup.withPairs(Dedup.ngramJaccard(sh, t, Some(cap)))(
         _.as[(Long, Long, Double)].collect().toSet)
       (full, capped)
     }
@@ -243,7 +225,7 @@ class DedupSpec extends SparkSpec {
     val sh = Dedup.shingleSet(skewed, col("doc_id"), col("text"), 3)
     val full = Dedup.withPairs(Dedup.ngramJaccard(sh, 0.05))(
       _.as[(Long, Long, Double)].collect().map(p => (p._1, p._2) -> p._3).toMap)
-    val capped = Dedup.withPairs(Dedup.ngramJaccardCapped(sh, 0.05, dfCap = 3L))(
+    val capped = Dedup.withPairs(Dedup.ngramJaccard(sh, 0.05, dfCap = Some(3L)))(
       _.as[(Long, Long, Double)].collect().map(p => (p._1, p._2) -> p._3).toMap)
     // (3,4) survives: candidate from the rare shared shingle, and its
     // Jaccard is EXACT (the stop shingle still counts in the recount)
@@ -261,7 +243,7 @@ class DedupSpec extends SparkSpec {
       val full = Dedup.withPairs(Dedup.ngramContainment(sh, t))(
         _.select(cols: _*).as[(Long, Long, Long, Long, Long, Double, Double)]
           .collect().toSet)
-      val capped = Dedup.withPairs(Dedup.ngramContainmentCapped(sh, t, cap))(
+      val capped = Dedup.withPairs(Dedup.ngramContainment(sh, t, Some(cap)))(
         _.select(cols: _*).as[(Long, Long, Long, Long, Long, Double, Double)]
           .collect().toSet)
       (full, capped)
@@ -293,7 +275,7 @@ class DedupSpec extends SparkSpec {
       _.select("da", "db", "i", "cab", "cba")
         .as[(Long, Long, Long, Double, Double)].collect()
         .map(p => (p._1, p._2) -> ((p._3, p._4, p._5))).toMap)
-    val capped = Dedup.withPairs(Dedup.ngramContainmentCapped(sh, 0.05, dfCap = 3L))(
+    val capped = Dedup.withPairs(Dedup.ngramContainment(sh, 0.05, dfCap = Some(3L)))(
       _.select("da", "db", "i", "cab", "cba")
         .as[(Long, Long, Long, Double, Double)].collect()
         .map(p => (p._1, p._2) -> ((p._3, p._4, p._5))).toMap)
@@ -303,6 +285,49 @@ class DedupSpec extends SparkSpec {
     // (1,2) is the documented miss: its only shared shingle is over-cap
     assert(full.contains((1L, 2L)) && !capped.contains((1L, 2L)))
     assert(capped.forall { case (k, v) => full(k) == v })
+  }
+
+  test("both n-gram measures match a driver-side brute force over the shingle sets (capped and uncapped)") {
+    // an independent reference for the one intersection core: exact
+    // i/na/nb, both measures, and the pair set, from collected sets. With
+    // a cap, a pair is found iff some shared shingle has df <= cap.
+    // "a b c" is in every doc (df 4 > cap 3): (1,2) and the short docs'
+    // pairs with 3 and 4 share only it, and are dropped under the cap
+    val skewed = Seq(
+      (1L, "a b c p"),
+      (2L, "a b c t"),
+      (3L, "a b c x y z h"),
+      (4L, "a b c x y z k")
+    ).toDF("doc_id", "text")
+    var capDropped = false
+    for (docs <- Seq(corpus, skewed); t <- Seq(0.3, 0.8); cap <- Seq(None, Some(3L))) {
+      val sh = Dedup.shingleSet(docs, col("doc_id"), col("text"), 3)
+      val sets = sh.as[(Long, String)].collect().groupBy(_._1)
+        .map { case (d, rows) => d -> rows.map(_._2).toSet }
+      val df = sets.values.toSeq.flatten.groupBy(identity).map { case (w, ws) => w -> ws.size }
+      val sharing = for {
+        da <- sets.keys.toSeq; db <- sets.keys.toSeq if da < db
+        shared = sets(da) intersect sets(db) if shared.nonEmpty
+      } yield (da, db, shared)
+      val nominated = sharing
+        .filter { case (_, _, shared) => shared.exists(w => cap.forall(df(w) <= _)) }
+        .map { case (da, db, shared) =>
+          (da, db, shared.size.toLong, sets(da).size.toLong, sets(db).size.toLong) }
+      capDropped ||= nominated.size < sharing.size
+      val wantJacc = nominated.map { case (da, db, i, na, nb) =>
+        (da, db, i * 1.0 / (na + nb - i)) }.filter(_._3 >= t).toSet
+      val wantCont = nominated.map { case (da, db, i, na, nb) =>
+        (da, db, i, na, nb, i * 1.0 / na, i * 1.0 / nb) }
+        .filter(r => math.max(r._6, r._7) >= t).toSet
+      val gotJacc = Dedup.withPairs(Dedup.ngramJaccard(sh, t, cap))(
+        _.as[(Long, Long, Double)].collect().toSet)
+      val gotCont = Dedup.withPairs(Dedup.ngramContainment(sh, t, cap))(
+        _.as[(Long, Long, Long, Long, Long, Double, Double)].collect().toSet)
+      val at = s"threshold $t, cap $cap, ${sets.size} docs"
+      assert(gotJacc == wantJacc, s"jaccard diverged at $at")
+      assert(gotCont == wantCont, s"containment diverged at $at")
+    }
+    assert(capDropped, "the cap must drop some all-stop-shingle pair")
   }
 
   test("lshTuning: areas match scalar quadrature over lshCollisionProb; argmin is sane") {

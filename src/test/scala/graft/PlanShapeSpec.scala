@@ -135,8 +135,8 @@ class PlanShapeSpec extends SparkSpec {
     // stop shingles via an anti-join against the df > cap set — without
     // it one hot shingle makes candidate generation quadratic in corpus
     // size; the stop recount leg must stay a left-semi (stop shingles
-    // only). r21: the plan is DATA-ADAPTIVE — one bounded count of the
-    // stop head decides it, so a CLEAN corpus (the sf0.001/sf0.1
+    // only). r21: the plan is DATA-ADAPTIVE — one bounded collect of the
+    // stop set decides it, so a CLEAN corpus (the sf0.001/sf0.1
     // fixture) skips the guard's five empty-input stages outright and
     // plans exactly [[Dedup.ngramContainment]]'s shape (bit-equal
     // results, the standing DedupSpec pin).
@@ -145,7 +145,7 @@ class PlanShapeSpec extends SparkSpec {
     val hot = (1 to 12).map(i => (i.toLong, s"a b c noise$i x$i y$i"))
       .toDF("doc_id", "text")
     val shHot = graft.operators.Dedup.shingleSet(hot, col("doc_id"), col("text"), 3)
-    val pHot = plan(graft.operators.Dedup.containmentCappedPairs(shHot, 0.8, 10L))
+    val pHot = plan(graft.operators.Dedup.ngramIntersections(shHot, Some(10L)))
     assert(pHot.contains("LeftAnti"),
       s"candidate index must anti-join the stop set:\n$pHot")
     assert(pHot.contains("LeftSemi"),
@@ -155,7 +155,7 @@ class PlanShapeSpec extends SparkSpec {
     // empty relations)
     val sh = graft.operators.Dedup.shingleSet(
       sf0001.documents, col("doc_id"), col("text"), 3)
-    val p = plan(graft.operators.Dedup.containmentCappedPairs(sh, 0.8, 50L))
+    val p = plan(graft.operators.Dedup.ngramIntersections(sh, Some(50L)))
     assert(!p.contains("LeftAnti") && !p.contains("LeftSemi"),
       s"clean corpus must take the guard-free fast path:\n$p")
   }
