@@ -40,15 +40,13 @@ object Engine {
     }
 
     /** The test JVM, where one session hosts every suite and test code
-      * holds plans/broadcasts alive across hundreds of tiny queries: 1 MiB
-      * Tungsten pages (not 64 MiB per broadcast relation and agg map), the
+      * holds plans/broadcasts alive across hundreds of tiny queries: the
       * single-level agg map (the two-level fast map pins an unspillable
       * page per agg per task, which livelocked the execution pool
       * mid-suite), and a context-cleaner GC every minute (the 30 min
       * default outlived the suite, so dropped broadcasts stayed pinned). */
     case object Test extends Profile {
       def confs: Map[String, String] = Map(
-        "spark.buffer.pageSize" -> "1m",
         "spark.sql.codegen.aggregate.map.twolevel.enabled" -> "false",
         "spark.cleaner.periodicGC.interval" -> "1min")
     }
@@ -62,7 +60,16 @@ object Engine {
   /** `local[cpus]`. */
   def localMaster: String = s"local[$cpus]"
 
-  /** The full conf map a session of `profile` is built with. */
+  /** The full conf map a session of `profile` is built with. Tungsten
+    * pages are 1 MiB in every profile: Spark's computed size (32 MiB at a
+    * 4 GiB heap and `local[4]`) is taken whole by each driver-built
+    * `UnsafeHashedRelation`, and cached plans keep their broadcasts alive
+    * (`InMemoryRelation` → `BroadcastExchangeExec.relationFuture`), so
+    * the memo and operator result caches pinned 7 × 32 MiB of
+    * kilobyte-sized relations at the end of an llm-pipeline run. Larger
+    * records still get their own page. Cost: Spark's 8192-entry page
+    * table caps one task at 8 GiB of Tungsten memory, reachable only by a
+    * task alone on a heap above ~14 GiB (pool = (heap − 300 MiB) × 0.6). */
   def confs(shufflePartitions: Int, profile: Profile): Map[String, String] =
     Map(
       "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
@@ -71,7 +78,8 @@ object Engine {
       "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       "spark.sql.warehouse.dir" ->
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse",
-      "spark.ui.enabled" -> "false") ++ profile.confs
+      "spark.ui.enabled" -> "false",
+      "spark.buffer.pageSize" -> "1m") ++ profile.confs
 
   def session(
       master: String = "local[*]",

@@ -218,7 +218,12 @@ object TimeSeries {
     * CDF folds over the `groups × bins` grid — BOUNDED by construction,
     * which is exactly what the exact form cannot promise. Counts are
     * exact longs, the statistic a fixed rational dag — order-immune.
-    * Returns `(g, n, n_rest, d, ks)`, the exact form's schema. */
+    * Returns `(g, n, n_rest, d, ks)`, the exact form's schema.
+    *
+    * Eager when `approxEdges = false`: the whole plan, `raise_error`
+    * group-count guard included, runs while the frame is built
+    * ([[CacheDiscipline]]`.materialized`), so a guard failure throws
+    * here, not at the first action (ROADMAP #2 owns removing this). */
   def ksDriftBinned(df: DataFrame, group: Column, value: Column,
       bins: Int = 1000, approxEdges: Boolean = false): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
@@ -344,10 +349,8 @@ object TimeSeries {
         lit(0.0).as("d"), lit(0.0).as("ks"))
     val out = body.unionAll(loud)
     // exact branch: materialize the |groups|-row result, then release
-    // the distinct-value histogram cache AND the edge table's persist
-    // handle (r21 lifecycle rule — CacheDiscipline; the approx branch
-    // caches nothing). The guard semantics are unchanged: the eager
-    // count executes the same raise_error dag a consumer would.
+    // the histogram cache and the edge table's persist handle (r21
+    // lifecycle rule — CacheDiscipline; the approx branch caches nothing).
     if (approxEdges) out
     else CacheDiscipline.materialized(out, gvHeld.get, edgesHeld.get)
   }

@@ -15,7 +15,8 @@ class EngineSpec extends AnyFunSuite {
       "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       "spark.sql.warehouse.dir" ->
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.buffer.pageSize" -> "1m"))
   }
 
   test("Bench and Test profiles only add confs on top of the common ones") {
@@ -26,6 +27,7 @@ class EngineSpec extends AnyFunSuite {
       assert(all.size == common.size + p.confs.size)
     }
     assert(Engine.Profile.Bench.confs("spark.sql.adaptive.enabled") == "false")
-    assert(Engine.Profile.Test.confs("spark.buffer.pageSize") == "1m")
+    assert(!Engine.Profile.Test.confs.contains("spark.buffer.pageSize"))
+    assert(Engine.confs(8, Engine.Profile.Test)("spark.buffer.pageSize") == "1m")
   }
 }
