@@ -22,11 +22,12 @@ object ExtensionQueries {
     * shingles — candidates via band equi-join, never N².
     *
     * Cache contract (applies to q32/q33 too): the dedup operators return a
-    * persisted pair table (small — that is the point of banding) so the
-    * sort below doesn't recompute the pipeline; a caller running MANY
-    * dedup calls in one session should wrap them in [[Dedup.withPairs]]
-    * or `.unpersist()` the result when done. Bench/Soak clearCache
-    * between reps; the verify driver runs each query once per session. */
+    * materialized pair table (a local checkpoint, small — that is the
+    * point of banding) so the sort below doesn't recompute the pipeline;
+    * a caller running MANY dedup calls in one session wraps them in
+    * [[Dedup.withPairs]] or calls [[Materialize.release]] on the result
+    * when done — or just drops the reference, and the ContextCleaner
+    * frees the stored rows. */
   def q31(t: Tables): DataFrame =
     Dedup.minHashNearDups(t.documents, col("doc_id"), col("text"),
         numHashes = 8, bands = 2, shingleN = 3, threshold = 0.5)

@@ -63,7 +63,7 @@ object Queries {
     * presentation sort whose driver would simply rerun the query. */
   private def sortedLarge(df: DataFrame, cols: Column*): DataFrame =
     if (lazySortsOn.value) df.orderBy(cols: _*)
-    else df.localCheckpoint(eager = true).orderBy(cols: _*)
+    else Materialize(df).orderBy(cols: _*)
 
   private val lazySortsOn = new scala.util.DynamicVariable(false)
 

@@ -170,10 +170,11 @@ object Soak {
     qs.foreach { case (_, q) => q(t).collect() } // warm (JIT/codegen)
     qs.foreach { case (n, q) =>
       val times = (1 to 2).map { _ =>
-        // the dedup operators persist their results; an identical fresh
-        // plan would read that cache and time a cache scan, not the
-        // pipeline — clear before every rep (same reason as Bench)
+        // operator caches and the Tables memo checkpoints would turn a
+        // rep into a scan of stored rows, not the pipeline — clear both
+        // before every rep (same reason as Bench)
         spark.sharedState.cacheManager.clearCache()
+        Tables.clearPairCache()
         val t0 = System.nanoTime(); q(t).collect()
         (System.nanoTime() - t0) / 1e9
       }
@@ -1212,7 +1213,7 @@ object Soak {
       val dropped = Similarity.semDedupDropped(e, centroids, tau = 0.4)
       val nDropped = dropped.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      dropped.unpersist(blocking = false) // the documented caller contract
+      graft.Materialize.release(dropped) // the documented caller contract
       println(f"[soak] semdedup_k $k%5d $ni2%12d $maxC%8d $nDropped%8d $wall%.2f")
       (k, ni2, wall)
     }

@@ -52,16 +52,15 @@ final case class Tables(spark: SparkSession, dir: String) {
     * consume the IDENTICAL pair set, so a suite session computes the
     * signature+band pipeline once instead of three times (the round-7
     * plan audit measured ~2 s of pure recompute at sf0.1). The result is
-    * already persisted+materialized by `minHashNearDups`; the cache owns
-    * that handle — consumers must NOT run it through `withPairs` (the
-    * unpersist would silently de-cache it for the next query). Bounded:
+    * already materialized by `minHashNearDups`; the cache owns that
+    * handle — consumers must NOT run it through `withPairs` (the release
+    * would drop its rows under the next query). Bounded:
     * one small-by-LSH-design pair table per scale dir. Long-lived
     * sessions that are done with dedup call [[Tables.clearPairCache]].
     *
-    * Resilient to `catalog.clearCache()` (Bench's cold-timing sweeps):
-    * a handle whose persist was cleared externally is discarded and the
-    * table recomputed+re-persisted, so consumers can never silently run
-    * against an unpersisted multi-consumer plan. */
+    * The table is a local checkpoint ([[Materialize]]), so it pins
+    * none of its build plan. `clearCache` does not touch memo
+    * checkpoints; `clearPairCache` releases them. */
   def documentNearDupPairs: DataFrame =
     Tables.memo(spark, dir, "pairs") { () =>
       graft.operators.Dedup.minHashNearDups(documents, col("doc_id"), col("text"))
@@ -69,23 +68,17 @@ final case class Tables(spark: SparkSession, dir: String) {
 
   /** The RESOLVED component table `(id, rep)` over
     * [[documentNearDupPairs]], memoized with the same (session, dir)
-    * keying and storage-level resilience: q57, q85, q106 and q109 all
-    * consume the identical clustering, so a suite session runs the
-    * iterative connectedComponents ONCE instead of four times (the
-    * round-8 bench measured ~4.5 s of pure CC recompute at sf0.1).
-    * `connectedComponents` materializes its result through per-round
-    * `localCheckpoint`s, but that storage is invisible to
-    * `DataFrame.storageLevel` (cacheManager-based), so the memo persists
-    * an explicit handle on top and counts it (eager) — the resilience
-    * check then works exactly as for the pair table. q72 deliberately
-    * stays OFF this memo: its point is re-resolving the same pair table
+    * keying: q57, q85, q106 and q109 all consume the identical
+    * clustering, so a suite session runs the iterative
+    * connectedComponents ONCE instead of four times (the round-8 bench
+    * measured ~4.5 s of pure CC recompute at sf0.1).
+    * `connectedComponents` already returns its last round's local
+    * checkpoint, which is what the memo holds. q72 deliberately stays
+    * OFF this memo: its point is re-resolving the same pair table
     * through the independent large-star/small-star algorithm. */
   def documentNearDupComponents: DataFrame =
     Tables.memo(spark, dir, "components") { () =>
-      val comp = graft.operators.Dedup.connectedComponents(documentNearDupPairs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      comp.count() // materialize: every consumer must hit warm storage
-      comp
+      graft.operators.Dedup.connectedComponents(documentNearDupPairs)
     }
 
   /** Shared TRAINED CENTROIDS (k = 8, 2 Lloyd rounds over the embeddings)
@@ -97,17 +90,13 @@ final case class Tables(spark: SparkSession, dir: String) {
     * per consumer at sf0.1). q142 deliberately stays OFF the memo (it IS
     * the gate for the training computation) and so does q160 (it gates
     * the k-means‖-seeded composition, a different trajectory). The
-    * trained table is k local rows; the persist handle exists so the
-    * memo's storage-level resilience check works unchanged. */
+    * trained table is k driver-side rows, already a materialized leaf. */
   def embeddingCentroids8: DataFrame =
     Tables.memo(spark, dir, "centroids8") { () =>
-      val c = graft.operators.Similarity.trainCentroids(
-          embeddings.select(col("vec_id"),
-            col("embedding").cast("array<double>").as("e")),
-          k = 8, iters = 2, dim = 64)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      c.count()
-      c
+      Materialize(graft.operators.Similarity.trainCentroids(
+        embeddings.select(col("vec_id"),
+          col("embedding").cast("array<double>").as("e")),
+        k = 8, iters = 2, dim = 64))
     }
 
   /** Shared HASHED FEATURE-PAIR table at dims = 32
@@ -118,16 +107,14 @@ final case class Tables(spark: SparkSession, dir: String) {
     * this table) and q147 (all five one-vs-rest langid models)
     * featurize the IDENTICAL corpus at the identical dims, so a suite
     * session pays the tokenize+hash explode once instead of three
-    * times. Same (session, dir) keying and clearCache resilience as
-    * the pair-table memo; Bench times the build as its own
+    * times. Same (session, dir) keying and local checkpoint as the
+    * pair-table memo: `clearCache` does not touch memo checkpoints;
+    * `clearPairCache` releases them. Bench times the build as its own
     * `shared_hashed_fp32` entry and times both consumers warm. */
   def hashedFeaturePairs32: DataFrame =
     Tables.memo(spark, dir, "fp32") { () =>
-      val fp = graft.operators.TextAnalysis.hashedFeaturePairs(
-          documents, col("doc_id"), col("text"), dims = 32)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      fp.count()
-      fp
+      Materialize(graft.operators.TextAnalysis.hashedFeaturePairs(
+        documents, col("doc_id"), col("text"), dims = 32))
     }
 
   /** Shared BIGRAM-LM CROSS-ENTROPY scores
@@ -141,12 +128,9 @@ final case class Tables(spark: SparkSession, dir: String) {
     * Bench entry: `shared_bigram_ce`. */
   def bigramCeScores: DataFrame =
     Tables.memo(spark, dir, "bigramCe") { () =>
-      val s = graft.operators.TextAnalysis.bigramCrossEntropy(
-          documents, col("doc_id"), col("text"),
-          isTarget = col("lang") === "en")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      s.count()
-      s
+      Materialize(graft.operators.TextAnalysis.bigramCrossEntropy(
+        documents, col("doc_id"), col("text"),
+        isTarget = col("lang") === "en"))
     }
 }
 
@@ -155,11 +139,11 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
 
   /** Shared (session, dir, kind)-keyed memo for suite-level derived
-    * inputs: the persisted tables above and driver-resident values such
+    * inputs: the materialized tables above and driver-resident values such
     * as [[graft.PipelineQueries.sharedClassifierWeights]]. A DataFrame
-    * value is valid while its storage level is not NONE, so a handle
-    * whose persist was cleared externally (`catalog.clearCache()`) is
-    * discarded and rebuilt; any other value is always valid. Entries of
+    * value is valid while it is [[Materialize.isLive]], so a
+    * handle whose storage was released is discarded and rebuilt; any
+    * other value is always valid. Entries of
     * a STOPPED SparkSession are purged on every call, so a long-lived
     * JVM that churns sessions (test suites) cannot leak them. */
   def memo[T <: AnyRef](spark: SparkSession, dir: String, kind: String)(
@@ -175,18 +159,19 @@ object Tables {
     val existing = memoCache.get(key)
     val valid = existing match {
       case null => false
-      case ds: Dataset[_] => ds.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case ds: Dataset[_] => Materialize.isLive(ds)
       case _ => true
     }
     if (valid) existing.asInstanceOf[T]
     else { val built = build(); memoCache.put(key, built); built }
   }
 
-  /** Release every memoized input: unpersist the DataFrame values, then
-    * drop all entries, so cold-timing harness reps rebuild each one. */
+  /** Release every memoized input: release the DataFrame values' stored
+    * rows, then drop all entries, so cold-timing harness reps rebuild
+    * each one. */
   def clearPairCache(): Unit = {
     memoCache.values.forEach {
-      case ds: Dataset[_] => ds.unpersist(blocking = false); ()
+      case ds: Dataset[_] => Materialize.release(ds)
       case _              => ()
     }
     memoCache.clear()

@@ -18,8 +18,6 @@ object VectorFunctions {
 
   def normSq(a: Column): Column = dot(a, a)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity `a·b / (|a|·|b|)`. Compute in double; cast float
     * arrays with `col.cast("array<double>")` first. */
   def cosineSimilarity(a: Column, b: Column): Column =

@@ -39,12 +39,6 @@ object ApproxOps {
     df.groupBy(keys: _*).agg(approx_count_distinct(item, rsd).as("n_distinct"))
   }
 
-  /** Approximate axis range: (p_lo, p_hi) quantiles instead of min/max —
-    * also the robust-range variant for outlier-heavy axes. */
-  def approxRange(c: Column, pLo: Double, pHi: Double,
-      accuracy: Int = 10000): Column =
-    percentile_approx(c, array(lit(pLo), lit(pHi)), lit(accuracy))
-
   /** Per-group percentile summary — THE operator API for quantiles. The
     * DEFAULT is the `percentile_approx` sketch (rank error ≤ n/`accuracy`,
     * deterministic): its partials merge associatively like any other

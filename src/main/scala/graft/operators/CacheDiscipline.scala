@@ -13,40 +13,36 @@ import org.apache.spark.storage.StorageLevel
   * done).
   *
   * The discipline — [[Graph]].hits' shape, factored out so every
-  * operator-level persist follows it: [[hold]] each intermediate, persist
-  * the RESULT, force it with one count (the single execution that fills
-  * every intermediate cache and drains it into the result), then release
-  * the intermediates immediately. After the operator returns, the only
-  * cache entry it leaves is the result the caller is about to consume —
-  * output-sized (runs, top-k, vocab pairs, gated rows), never the
-  * exploded working set; a corpus-scale output (quantileGate,
-  * ccnetBuckets) is still the caller's to unpersist when done.
-  * CacheLifecycleSpec pins the contract. An operator releases only
-  * caches it created: a frame the caller already persisted stays cached.
+  * operator-level persist follows it: [[hold]] each intermediate,
+  * [[graft.Materialize]] the RESULT (the one execution that fills every
+  * intermediate cache), then release the intermediates. The operator
+  * leaves no CacheManager entry: its result is a lineage-free leaf that
+  * pins no build plan, freed once the caller drops it or calls
+  * `Materialize.release`. CacheLifecycleSpec pins the contract. An
+  * operator releases only caches it created: a frame the caller already
+  * persisted, or a live leaf, is used as it is.
   *
   * Measured cost: 26–88 ms per affected leg (~3–11%, interleaved
   * same-session A/B at sf0.1, best-of-4) — one extra action + the result
-  * cache write — against unbounded cache residency without it.
+  * checkpoint write — against unbounded cache residency without it.
   */
 private[operators] object CacheDiscipline {
 
-  /** `df`, persisted, and whether this hold created its cache entry
-    * (storage level NONE on entry) — [[release]] drops only such a one. */
-  final class Held private[CacheDiscipline] (val df: DataFrame, created: Boolean) {
-    def release(): Unit = if (created) { df.unpersist(blocking = false); () }
+  /** `df`, live, and whether this hold created its storage. */
+  final class Held private[CacheDiscipline] (val df: DataFrame, val created: Boolean) {
+    def release(): Unit = if (created) graft.Materialize.release(df)
   }
 
-  def hold(df: DataFrame): Held = {
-    val created = df.storageLevel == StorageLevel.NONE
-    new Held(df.persist(StorageLevel.MEMORY_AND_DISK), created)
-  }
+  /** `df` persisted, unless it is already live: then not owned. */
+  def hold(df: DataFrame): Held =
+    if (graft.Materialize.isLive(df)) new Held(df, created = false)
+    else new Held(df.persist(StorageLevel.MEMORY_AND_DISK), created = true)
 
-  /** Hold `result`, force it with one count, release `intermediates`. */
+  /** Materialize `result`, then release `intermediates`. */
   def materializedHeld(result: DataFrame, intermediates: Held*): Held = {
-    val out = hold(result)
-    out.df.count()
+    val out = graft.Materialize(result)
     intermediates.foreach(_.release())
-    out
+    new Held(out, created = out ne result)
   }
 
   def materialized(result: DataFrame, intermediates: Held*): DataFrame =

@@ -27,18 +27,18 @@ object Dedup {
 
   // Operators here `hold` their corpus-sized intermediates (shingle and
   // signature tables) and return `materialized(result, holds...)`: the
-  // pair result, small relative to the corpus, comes back persisted —
-  // callers that loop over many corpora should `.unpersist()` it.
+  // pair result, small relative to the corpus, comes back as a local
+  // checkpoint — freed once dropped, or at once by `Materialize.release`.
   import CacheDiscipline.{hold, materialized}
 
-  /** Loan pattern for the persisted results of [[minHashNearDups]] /
+  /** Loan pattern for the materialized results of [[minHashNearDups]] /
     * [[simHashNearDups]] / [[ngramJaccard]]: runs `f` over the pair table
-    * and unpersists it afterwards, so long-lived sessions (notebooks,
-    * verify drivers) running many dedup calls never accumulate cached pair
-    * tables. Callers that keep the raw DataFrame instead own the
-    * `.unpersist()` (see each operator's scaladoc). */
+    * and releases it afterwards ([[graft.Materialize.release]]), so
+    * long-lived sessions (notebooks, verify drivers) running many dedup
+    * calls never accumulate stored pair tables. `f` must finish with the
+    * pairs: a lazy frame it returns may not read them after the loan. */
   def withPairs[T](pairs: DataFrame)(f: DataFrame => T): T =
-    try f(pairs) finally { pairs.unpersist(blocking = false); () }
+    try f(pairs) finally graft.Materialize.release(pairs)
 
   /** Long-form distinct token-n-gram shingles: (id, w). Shingle derivation
     * uses the native `word_ngrams` expression (identical output to the HOF
@@ -234,9 +234,8 @@ object Dedup {
       lit(numHashes.toDouble)
 
   /** Full MinHash+LSH near-dup pipeline: pairs (da, db, est) with
-    * estimated Jaccard ≥ `threshold`. Returns a persisted, already
-    * materialized result (see [[materialized]]); `.unpersist()` it when
-    * done. */
+    * estimated Jaccard ≥ `threshold`. Returns a materialized result (see
+    * [[materialized]]); [[withPairs]] releases it when done. */
   def minHashNearDups(
       docs: DataFrame, id: Column, text: Column,
       numHashes: Int = 8, bands: Int = 2, shingleN: Int = 3,
@@ -270,8 +269,8 @@ object Dedup {
     *    Running this over any split of a corpus and unioning with the
     *    prior corpus-only pairs reproduces [[minHashNearDups]] over the
     *    whole corpus EXACTLY (same bands → same candidates → same
-    *    estimates; pinned in DedupSpec). Persisted + materialized like
-    *    the batch operators — `.unpersist()` when done.
+    *    estimates; pinned in DedupSpec). Materialized like the batch
+    *    operators.
     *  - `updatedSignatures` — corpus signatures ∪ the new batch's, the
     *    input for tomorrow's call, one row per id: a batch id already in
     *    the corpus (a re-crawled page) REPLACES its old signature — new
@@ -614,7 +613,7 @@ object Dedup {
           }
         }
         (truncate, clean)
-      case None => ((d: DataFrame) => d.localCheckpoint(), () => ())
+      case None => ((d: DataFrame) => graft.Materialize(d), () => ())
     }
   }
 

@@ -73,8 +73,7 @@ object Graph {
         r = r.localCheckpoint(eager = false)
     }
     // force before releasing the cached inputs the lineage references
-    val out = r.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+    val out = graft.Materialize(r)
     p.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out
@@ -146,14 +145,12 @@ object Graph {
         h = h.localCheckpoint(eager = false)
       }
     }
-    val out = nodes
+    val out = graft.Materialize(nodes
       .join(h, Seq("node"), "left")
       .join(a, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub"), lit(0.0)).as("hub"),
-        coalesce(col("auth"), lit(0.0)).as("auth"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
+        coalesce(col("auth"), lit(0.0)).as("auth")))
     eSrc.unpersist(blocking = false)
     eDst.unpersist(blocking = false)
     nodes.unpersist(blocking = false)

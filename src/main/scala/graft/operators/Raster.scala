@@ -105,14 +105,6 @@ object Raster {
       round(cume_dist().over(Window.orderBy(countCol)) *
         lit(math.pow(10.0, scale.toDouble))).cast("long"))
 
-  /** `--norm log/cbrt` shading variants [U] — plain scalar maps, same
-    * shape as [[shadeEqHist]] (ShadePlot.shade applies the max-normalized
-    * forms). */
-  def shadeLog(raster: DataFrame, countCol: Column, out: String = "shade"): DataFrame =
-    raster.withColumn(out, log1p(countCol))
-  def shadeCbrt(raster: DataFrame, countCol: Column, out: String = "shade"): DataFrame =
-    raster.withColumn(out, cbrt(countCol))
-
   /** Dynamic spreading (datashader `tf.dynspread` [U]): grow the spread
     * radius until at least `threshold` of the canvas is covered (or
     * `maxRadius` is hit) — dense rasters stay sharp, sparse ones dilate.

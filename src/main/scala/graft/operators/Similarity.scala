@@ -71,13 +71,12 @@ object Similarity {
     * predicate per pair, no iteration, no driver round-trip.
     *
     * Caller contract (the [[Graph.hits]] discipline): the returned
-    * DataFrame is persisted MEMORY_AND_DISK and already materialized
+    * DataFrame is a [[graft.Materialize]] checkpoint, already computed
     * (eager by design — forcing it here is what lets the much larger
     * assignment table be released before returning); callers that
-    * invoke this repeatedly in one JVM (soak loops, re-runs) must
-    * `unpersist()` the previous result or clear the cache between
-    * calls, or dropped-set blocks accumulate for the session
-    * lifetime. */
+    * invoke this repeatedly in one JVM (soak loops, re-runs) should
+    * `Materialize.release` the previous result or drop the reference,
+    * which lets the ContextCleaner free its blocks. */
   def semDedupDropped(vectors: DataFrame, centroids: DataFrame,
       tau: Double): DataFrame = {
     GraftFunctions.ensureRegistered(vectors.sparkSession)
@@ -100,15 +99,13 @@ object Similarity {
       col("e").as("ea"), col("simc").as("sa"))
     val b = va.select(col("cid"), col("vec_id").as("vb"),
       col("e").as("eb"), col("simc").as("sb"))
-    val out = a.join(b, Seq("cid"))
+    val out = graft.Materialize(a.join(b, Seq("cid"))
       .filter(col("va") =!= col("vb"))
       .filter(GraftFunctions.cosineSimilarity(col("ea"), col("eb")) >= tau)
       .filter(col("sb") < col("sa") ||
         (col("sb") === col("sa") && col("vb") < col("va")))
       .groupBy(col("cid"), col("va").as("vec_id"), col("sa").as("simc"))
-      .agg(count(lit(1)).as("n_dups"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
+      .agg(count(lit(1)).as("n_dups")))
     va.unpersist(blocking = false)
     out
   }

@@ -9,26 +9,29 @@ import graft.operators._
   * corpus-scale intermediates (exploded line/shingle/token tables, scored
   * input chains, distinct-value histograms) must RELEASE those caches
   * before returning — the [[CacheDiscipline.materialized]] contract:
-  * after an operator call, the only net-new entry in
-  * `spark.sharedState.cacheManager` is the operator's own (bounded)
-  * result, and unpersisting that result leaves the manager exactly as
-  * found. Without this, a long-lived session calling these operators
-  * repeatedly pins one exploded-corpus-sized cache per call until
-  * memory/disk pressure evicts it (guide §5). */
+  * after an operator call, `spark.sharedState.cacheManager` holds no
+  * entry at all — the operator's own (bounded) result is a
+  * [[Materialize]]d leaf — and releasing that result leaves the manager
+  * exactly as found. Without this, a long-lived session calling these
+  * operators repeatedly pins one exploded-corpus-sized cache per call
+  * until memory/disk pressure evicts it (guide §5). */
 class CacheLifecycleSpec extends SparkSpec {
 
   private def cm = spark.sharedState.cacheManager
 
-  /** Runs `op`, asserts the operator left ONLY its (already
-    * materialized) result cached, then releases the result and asserts
-    * the manager is empty again. */
+  /** Runs `op`, asserts the operator returned its result materialized
+    * as a single leaf and left no cache entry, then releases the result
+    * and asserts the manager is still empty. */
   private def assertOnlyResultCached(label: String)(op: => DataFrame): Unit = {
     cm.clearCache()
     Tables.clearPairCache()
     val out = op
-    assert(out.storageLevel.useMemory || out.storageLevel.useDisk,
-      s"$label: result must come back persisted (materialized contract)")
-    out.unpersist(blocking = true)
+    assert(Materialize.isLive(out) && out.queryExecution.logical.children.isEmpty,
+      s"$label: result must come back materialized, as a single leaf")
+    assert(cm.isEmpty,
+      s"$label: the operator must leave no cache entry — an intermediate " +
+        "cache leaked, or the result pins its build plan")
+    Materialize.release(out, blocking = true)
     assert(cm.isEmpty,
       s"$label: cacheManager must hold nothing once the result is " +
         "released — an intermediate cache leaked")
@@ -126,7 +129,7 @@ class CacheLifecycleSpec extends SparkSpec {
     cm.clearCache()
     Tables.clearPairCache()
     val owned = input.persist()
-    op(owned).unpersist(blocking = true)
+    Materialize.release(op(owned), blocking = true)
     assert(owned.storageLevel.useMemory || owned.storageLevel.useDisk,
       s"$label unpersisted a cache its caller owns")
     owned.unpersist(blocking = true)

@@ -2,11 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions.{avg, expr, lit, max}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.{Canvas, ShadePlot}
 import graft.operators.ShadePlot.PlotSpec
@@ -25,37 +24,21 @@ class CliSpec extends SparkSpec {
     spark.read.parquet(dir).collect().map(_.toSeq.mkString(",")).toSeq.sorted
 
   /** How many times `body` reads the files of `table`: the distinct file
-    * scans of that table in the executed plans of its actions, looking
-    * through cached relations into the plan that built them (a cache is
-    * one scan however many actions read it). Listener events arrive
-    * asynchronously and in order, so a marked action after `body` tells
-    * when all of its events have been seen. */
+    * scans of that table in the executed plans of its actions
+    * ([[ActionPlans]]), looking through cached relations into the plan
+    * that built them (a cache is one scan however many actions read
+    * it). */
   private def tableScans(table: String)(body: => Unit): Int = {
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
-    val marker = "__scan_count_done"
-    @volatile var done = false
     object aqe extends AdaptiveSparkPlanHelper
     def scans(plan: SparkPlan): Seq[FileSourceScanExec] = aqe.collect(plan) {
       case s: FileSourceScanExec
           if s.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => Seq(s)
       case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
     }.flatten
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) done = true
-        else seen.synchronized { scans(qe.executedPlan).foreach(seen.add) }
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      spark.range(1).select(lit(1).as(marker)).collect()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!done && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(done, "listener events did not arrive")
-      seen.synchronized(seen.size)
-    } finally spark.listenerManager.unregister(listener)
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean])
+    ActionPlans(spark)(body)._2.flatMap(a => scans(a._2)).foreach(seen.add)
+    seen.size
   }
 
   test("one plot reads its source once for the range and once for the raster") {

@@ -154,7 +154,7 @@ class DedupSpec extends SparkSpec {
     // session looping over corpora must not accumulate lineage caches.
     val cached = settle(3)
     assert(cached.size == 3, s"expected 3 new cached results, found $cached")
-    Seq(r1, r2, r3).foreach(_.unpersist(blocking = true))
+    Seq(r1, r2, r3).foreach(Materialize.release(_, blocking = true))
     assert(settle(0).isEmpty,
       "unpersisting the returned handles must release everything")
     // the loan form owns the cleanup: nothing stays cached after withPairs

@@ -14,31 +14,47 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def q(name: String): String =
-    plan(SparkEntry.queries(name)(spark, "/root/testdata/sf0.001"))
+  /** The query's executed plan, followed by the executed plans of the
+    * `localCheckpoint` actions its construction ran ([[ActionPlans]]). An
+    * operator that materializes its result ([[Materialize]]) leaves only
+    * a scan of the stored rows in the query's plan; the plan that built
+    * them — the shape evidence — is its `localCheckpoint` action's, the
+    * same post-execution AQE text a cached result's InMemoryRelation
+    * echoed. Other construction-time actions (a trainer's collects) are
+    * not part of the query's plan, and were not part of that echo. */
+  private def q(name: String): String = {
+    val (df, built) = materializing(name)
+    (plan(df) +: built).mkString("\n")
+  }
 
-  /** The executed-plan string with each AQE "== Initial Plan ==" echo
-    * stripped (r21): operators that eagerly materialize their result
-    * (CacheDiscipline) print the build plan inside an InMemoryRelation
-    * whose AdaptiveSparkPlan echoes BOTH final and initial sections —
-    * exact node counts would double. Counting on the final sections
-    * keeps the assertions' intent. */
+  /** Memos are released first, so the memo builds a query triggers are
+    * recorded whatever ran before it in this session. */
+  private def materializing(name: String): (DataFrame, Seq[String]) = {
+    Tables.clearPairCache()
+    val (df, actions) =
+      ActionPlans(spark)(SparkEntry.queries(name)(spark, sf0001.dir))
+    (df, actions.collect { case ("localCheckpoint", p) => p.toString })
+  }
+
+  /** The plan strings with each AQE "== Initial Plan ==" echo stripped
+    * (r21): a materialized result's build plan prints BOTH final and
+    * initial sections — exact node counts would double. Counting on the
+    * final sections keeps the assertions' intent. Each top-level
+    * `AdaptiveSparkPlan` (one per recorded action) is cut on its own. */
   private def finalOnly(p: String): String =
-    p.split(java.util.regex.Pattern.quote("== Initial Plan ==")).head
+    p.split("(?m)^(?=AdaptiveSparkPlan)")
+      .map(_.split(java.util.regex.Pattern.quote("== Initial Plan ==")).head)
+      .mkString
 
-  /** The materialized RESULT's cached build plan (r21): for a query
-    * whose operator returns a CacheDiscipline-materialized frame, the
-    * outer executed plan is just sort-over-InMemoryTableScan; the shape
-    * evidence lives in the relation's cachedPlan — the same surface the
-    * pre-r21 lazy plan exposed. */
+  /** The materialized RESULT's build plan (r21): for a query whose
+    * operator returns a [[Materialize]]d frame, the outer executed plan
+    * is just sort-over-scan; the shape evidence lives in the plans of
+    * the `localCheckpoint` actions its construction ran — the same
+    * surface the pre-r21 lazy plan exposed. */
   private def qBuild(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-    // search the OPTIMIZED LOGICAL plan: the physical root is an
-    // AdaptiveSparkPlanExec, which hides its children from collect
-    df.queryExecution.optimizedPlan.collectFirst {
-      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        r.cachedPlan.toString
-    }.getOrElse(fail(s"$name: expected a materialized result cache in the plan"))
+    val built = materializing(name)._2
+    if (built.isEmpty) fail(s"$name: expected a materialized result's build action")
+    built.mkString("\n")
   }
 
   test("lazySorts: q01 builds with a bare range sort over its full upstream, no checkpoint") {
@@ -180,7 +196,8 @@ class PlanShapeSpec extends SparkSpec {
     // appear anywhere between the scan and the first aggregate.
     // r21: the operator eagerly materializes its (3-row) result and
     // releases the gv/edge caches (CacheDiscipline), so the shape
-    // evidence lives in the result's cached BUILD plan (qBuild)
+    // evidence lives in the BUILD plans of the edge frame and the
+    // result, their localCheckpoint actions (qBuild)
     val p = qBuild("q185_ks_binned")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"quantile edges must broadcast into the fold:\n$p")
@@ -210,9 +227,9 @@ class PlanShapeSpec extends SparkSpec {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       // cold rebuild under the static planner, so exchange reuse is a
-      // static rule and therefore visible in the plan string (r21: the
-      // warm result cache would otherwise satisfy the query without
-      // re-planning the build)
+      // static rule and therefore visible in the plan string (the edge
+      // frame now reaches the binning branch as a Scan ExistingRDD;
+      // the gv cache is read on both branches)
       spark.sharedState.cacheManager.clearCache()
       val ps = qBuild("q185_ks_binned")
       assert("InMemoryTableScan".r.findAllIn(ps).size >= 2,
@@ -514,10 +531,17 @@ class PlanShapeSpec extends SparkSpec {
     // training ran in the driver loop; the gated plan is the scoring
     // composition — feature pairs joined to the checkpointed weight
     // relation plus the doc-keyed sum
-    val p = q("q141_hashed_classifier")
-    assert(p.contains("Scan ExistingRDD") || p.contains("LocalTableScan"),
+    val (df, built) = materializing("q141_hashed_classifier")
+    val p = plan(df)
+    // the scoring plan reads exactly two stored relations: the fp32 memo
+    // and the weight checkpoint (bucket, weight). A lazy weight table
+    // would bring its GD chain along: more feature-table scans and the
+    // persisted label table
+    assert("Scan ExistingRDD".r.findAllIn(p).size == 2 &&
+      """Scan ExistingRDD\[__lh_b#\d+L?,__lh_wb#""".r.findFirstIn(p).isDefined,
       s"the trained weight table must enter as a materialized relation:\n$p")
-    assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
+    val all = (p +: built).mkString("\n")
+    assert(!all.contains("CartesianProduct"), s"no cartesian:\n$all")
   }
 
   test("q157: interpolation is the user-keyed window shuffle only — no join, no aggregate") {
