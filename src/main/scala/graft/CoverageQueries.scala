@@ -251,8 +251,9 @@ object CoverageQueries {
 
   /** q133: Q30's as-of join through the UNION-SORT escape hatch
     * ([[graft.operators.AsOf.lastEventBefore]] — linear in a hot key's
-    * event count where join-then-max is quadratic; see the asof_hotuser
-    * soak). Answer identity with the contract shape is the operator's
+    * event count where join-then-max is quadratic; see the `asof_hotuser`
+    * probe in ROUND_NOTES.md, round 12, source `Soak.scala` at 99b069a).
+    * Answer identity with the contract shape is the operator's
     * contract, so the gate runs Q30's exact oracle — the q128/q122
     * precedent: two independent Spark plans and one DuckDB derivation
     * meeting at the same rows. */

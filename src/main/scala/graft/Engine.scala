@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * [[Engine.session]] is the one place a SparkSession is built: every
   * main and the test suite pick a [[Engine.Profile]] instead of copying
-  * configs (UTC, nanos-as-long, graft native functions registered via
+  * configs (UTC, graft native functions registered via
   * the extensions mechanism). [[Engine.open]] loads a scale-factor
   * directory and registers every table as a temp view, which gives users
   * free-form `spark.sql(...)` over the catalog — the analogue of the
@@ -74,7 +74,6 @@ object Engine {
     Map(
       "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       "spark.sql.warehouse.dir" ->
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse",
@@ -94,21 +93,19 @@ object Engine {
     spark
   }
 
-  /** Open a data directory as a catalog: loads all tables (events
-    * normalized) and registers them as temp views for SQL access. */
+  /** Open a data directory as a catalog: loads all tables and registers
+    * them as temp views for SQL access. */
   def open(spark: SparkSession, dir: String): Tables = {
     val t = Tables(spark, dir)
-    Tables.schemas.keys.foreach {
-      case "events" => t.events.createOrReplaceTempView("events")
-      case name =>
-        val df: DataFrame = name match {
-          case "region" => t.region;     case "nation" => t.nation
-          case "customer" => t.customer; case "supplier" => t.supplier
-          case "part" => t.part;         case "orders" => t.orders
-          case "lineitem" => t.lineitem; case "documents" => t.documents
-          case "embeddings" => t.embeddings
-        }
-        df.createOrReplaceTempView(name)
+    Tables.schemas.keys.foreach { name =>
+      val df: DataFrame = name match {
+        case "region" => t.region;     case "nation" => t.nation
+        case "customer" => t.customer; case "supplier" => t.supplier
+        case "part" => t.part;         case "orders" => t.orders
+        case "lineitem" => t.lineitem; case "documents" => t.documents
+        case "embeddings" => t.embeddings; case "events" => t.events
+      }
+      df.createOrReplaceTempView(name)
     }
     t
   }

@@ -588,9 +588,10 @@ object ExtensionQueries {
     * ([[Similarity.sprRotation]]/`rotateSigned`): q89's PQ chain run in
     * a rotated space that scatters dimensions across subspaces
     * (variance re-balancing, PQ's classic contiguous-concentration fix;
-    * the measured lift lives in `Soak opq_ab` on a correlated corpus —
-    * the fixture embeddings are dimension-iid, so HERE the gate pins
-    * the MECHANICS). The rotation is md5-derived, so the oracle
+    * the lift measured on a correlated corpus by the `opq_ab` probe is
+    * recorded in ROUND_NOTES.md, round 16; the probe's source is
+    * `Soak.scala` at 99b069a — the fixture embeddings are
+    * dimension-iid, so HERE the gate pins the MECHANICS). The rotation is md5-derived, so the oracle
     * re-derives permutation and signs in SQL (rank over hashed dims)
     * instead of trusting interpolated literals, then replays encode /
     * reconstruct / ADC in the rotated space. */

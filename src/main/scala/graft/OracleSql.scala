@@ -6,9 +6,8 @@ package graft
   * column-naming rule: every computed column is aliased identically on both
   * sides, and engine-specific integer widths are cast to BIGINT).
   *
-  * Note: DuckDB 1.0.0 reads the `TIMESTAMP(NANOS)` events file natively as
-  * µs TIMESTAMP (verified: no sub-µs values exist), so `events` is usable
-  * directly here while the Spark side normalizes via nanos-as-long.
+  * Both engines read the `timestamp[us]` columns (`events.ts`,
+  * `o_orderdate`, `l_shipdate`) natively as µs TIMESTAMP.
   */
 object OracleSql {
 

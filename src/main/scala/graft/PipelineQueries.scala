@@ -286,10 +286,11 @@ object PipelineQueries {
     * banner tokens. The oracle rebuilds the cap with an anti join on
     * `count(DISTINCT doc_id) > 50`, so the gate proves the DROP
     * semantics, not just the happy path (the q128 discipline applied to
-    * q88; the `exactsub_hotshingle` soak measures the capped-vs-uncapped
+    * q88; the `exactsub_hotshingle` probe measured the capped-vs-uncapped
     * separation this exists for — ×4 corpus: uncapped wall 4.3×
     * quadratic, capped 1.0× flat, banner pair count closed-form
-    * verified at n·(n−1)/2). */
+    * verified at n·(n−1)/2; recorded in ROUND_NOTES.md, round 14, probe
+    * source `Soak.scala` at 99b069a). */
   def q145(t: Tables): DataFrame = {
     val banner = "please accept our cookie policy to continue reading this site today"
     val docs = t.documents.select(col("doc_id"),
@@ -338,8 +339,10 @@ object PipelineQueries {
   /** q158: HILBERT clustering key ([[Layout.hilbertValue2]]) — q92's
     * better-locality sibling over the IDENTICAL binning: consecutive
     * curve positions are always grid-adjacent, so range predicates
-    * touch fewer files at the same file count (`Soak hilbert_ab`
-    * measures it; this gate pins the curve arithmetic — every level's
+    * touch fewer files at the same file count (the `hilbert_ab` probe
+    * measured it, recorded in ROUND_NOTES.md, "Probe results kept when
+    * Soak's A/B modes were deleted"; probe source `Soak.scala` at
+    * 99b069a; this gate pins the curve arithmetic — every level's
     * quadrant digit, reflection and transposition — against the same
     * transform unrolled as per-level SQL CTEs). */
   def q158(t: Tables): DataFrame = {
@@ -908,7 +911,8 @@ object PipelineQueries {
     * plus a skew-free winning-coordinates join instead of the keep-first
     * window (the hot-boilerplate escape hatch; see
     * [[Dedup.dedupLinesAcrossCorpus]]'s skew note and the
-    * linededup_hotkey soak). Answer-identity with the window form is the
+    * `linededup_hotkey` probe, recorded in ROUND_NOTES.md, round 12,
+    * source `Soak.scala` at 99b069a). Answer-identity with the window form is the
     * operator's contract, so the gate runs the SAME oracle as q122 —
     * the driver independently proves both plans meet at the same
     * byte-identical reconstruction. */

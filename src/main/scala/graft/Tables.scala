@@ -35,17 +35,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   lazy val lineitem: DataFrame  = load("lineitem")
   lazy val documents: DataFrame = load("documents")
   lazy val embeddings: DataFrame = load("embeddings")
-
-  /** `events.parquet` has shipped with BOTH `TIMESTAMP(NANOS)` (rounds 1-8)
-    * and `timestamp[us]` (round 9+) physical types, so the `ts` layout is
-    * probed from the parquet footer once per directory (memoized JVM-wide)
-    * instead of pinned. Nanos files — which Spark 4.x refuses to read
-    * natively (`[PARQUET_TYPE_ILLEGAL]`) — are read as long under
-    * `nanosAsLong` and truncated to microseconds with integer division
-    * (exact: the generator emits µs-precision values; verified equal to
-    * DuckDB's native read). Micros files read directly as TimestampType.
-    */
-  lazy val events: DataFrame = Tables.eventsView(spark, dir)
+  lazy val events: DataFrame    = load("events")
 
   /** The MinHash+LSH near-dup pair table over `documents` at the default
     * parameters, memoized per (session, dir): q57, q72 and q85 all
@@ -177,71 +167,10 @@ object Tables {
     memoCache.clear()
   }
 
-  /** Per-directory memo of the probed `events.ts` physical layout (true =
-    * TIMESTAMP(NANOS)). One driver-side footer read per dir per JVM; the
-    * file's physical type can't change under a running JVM (the driver
-    * regenerates testdata only between rounds). */
-  private val eventsNanosByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  /** Probe whether `$dir/events.parquet` stores `ts` as TIMESTAMP(NANOS).
-    * Under `nanosAsLong=true`, Spark's footer-based schema inference
-    * surfaces a nanos column as LongType and a micros column as
-    * TimestampType — a cheap, codec-level discriminator. */
-  def eventsTsIsNanos(spark: SparkSession, dir: String): Boolean =
-    eventsNanosByDir.computeIfAbsent(dir, _ => {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // a scale dir holds events.parquet among other tables; a stream dir
-      // IS the events directory (arbitrary file names) — probe accordingly
-      val path =
-        if (new java.io.File(s"$dir/events.parquet").exists()) s"$dir/events.parquet"
-        else dir
-      val inferred = spark.read.parquet(path).schema
-      inferred("ts").dataType == LongType
-    })
-
-  /** Nanos-era physical schema: `ts` read as raw long under `nanosAsLong`.
-    * (lazy: `schemas` is declared below — avoids an init-order null). */
-  lazy val eventsSchemaNanos: StructType = StructType(schemas("events").map {
-    case f if f.name == "ts" => f.copy(dataType = LongType)
-    case f                   => f
-  })
-
-  /** The canonical `events` view over a directory: ts is TimestampType at
-    * microsecond precision regardless of the file's physical layout
-    * (probed — see [[eventsTsIsNanos]]). */
-  def eventsView(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    if (eventsTsIsNanos(spark, dir)) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.schema(eventsSchemaNanos).parquet(path)
-        .withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-    } else spark.read.schema(schemas("events")).parquet(path)
-  }
-
-  /** Streaming twin of [[eventsView]]: a file-source stream over a
-    * directory of events parquet, ts normalized identically. The probe
-    * runs on the same dir (batch footer read) before the stream starts —
-    * but only when a parquet file already exists there: on a still-empty
-    * stream directory (files arriving after start) batch schema
-    * inference would throw, so the stream falls back to the pinned
-    * micros schema (the current generator layout) WITHOUT memoizing, and
-    * a later call re-probes once files exist. Limitation (of the probe
-    * design, not this fallback): the layout is resolved per directory,
-    * so a dir that mixes nanos- and micros-era files would read the
-    * minority layout wrong — the driver regenerates testdata whole-dir
-    * between rounds, which is exactly the supported shape. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val hasParquet = {
-      val fs = new java.io.File(dir).listFiles()
-      fs != null && fs.exists(f => f.isFile && f.getName.endsWith(".parquet"))
-    }
-    if (hasParquet && eventsTsIsNanos(spark, dir)) {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.readStream.schema(eventsSchemaNanos).parquet(dir)
-        .withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-    } else spark.readStream.schema(schemas("events")).parquet(dir)
-  }
+  /** A file-source stream over a directory of events parquet, on the
+    * pinned schema (so it also starts on a dir whose files arrive later). */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(schemas("events")).parquet(dir)
 
   /** Schema-drift guard: diff every pinned schema against the actual
     * parquet footers under `dir` and fail LOUDLY, naming each divergent
@@ -250,29 +179,30 @@ object Tables {
     * `events.ts` flipped TIMESTAMP(NANOS) → timestamp[us] and the stale
     * nanos view read 2024 data as 1970). Field comparison is by name +
     * dataType, ignoring nullability/metadata; extra columns in the file
-    * are fine (pruned), missing ones are drift. One footer read per
-    * table — call once per run (Verify does), not per query. */
+    * are fine (pruned), missing ones are drift. A footer Spark cannot
+    * infer at all (a TIMESTAMP(NANOS) column is `[PARQUET_TYPE_ILLEGAL]`,
+    * a message that names no table) is reported under its table's name.
+    * One footer read per table — call once per run (Verify does), not
+    * per query. */
   def assertSchemasMatch(spark: SparkSession, dir: String): Unit = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val diffs = schemas.keys.toSeq.sorted.flatMap { name =>
-      val actual = spark.read.parquet(s"$dir/$name.parquet").schema
-      val pinned =
-        if (name == "events" && eventsTsIsNanos(spark, dir)) eventsSchemaNanos
-        else schemas(name)
-      // TIMESTAMP vs TIMESTAMP_NTZ is not drift: the testdata stores NTZ
-      // (isAdjustedToUTC=false) and the pinned TimestampType read is
-      // bit-identical under the mandated UTC session timezone.
-      def norm(dt: DataType): DataType = dt match {
-        case TimestampNTZType => TimestampType
-        case other            => other
-      }
-      pinned.flatMap { f =>
-        actual.fields.find(_.name == f.name) match {
-          case None =>
-            Some(s"$name.${f.name}: pinned ${f.dataType.sql}, MISSING from file")
-          case Some(a) if norm(a.dataType) != norm(f.dataType) =>
-            Some(s"$name.${f.name}: pinned ${f.dataType.sql}, file has ${a.dataType.sql}")
-          case _ => None
+    // TIMESTAMP vs TIMESTAMP_NTZ is not drift: the testdata stores NTZ
+    // (isAdjustedToUTC=false) and the pinned TimestampType read is
+    // bit-identical under the mandated UTC session timezone.
+    def norm(dt: DataType): DataType = dt match {
+      case TimestampNTZType => TimestampType
+      case other            => other
+    }
+    val diffs = schemas.toSeq.sortBy(_._1).flatMap { case (name, pinned) =>
+      scala.util.Try(spark.read.parquet(s"$dir/$name.parquet").schema) match {
+        case scala.util.Failure(e) => Seq(s"$name: unreadable footer: ${e.getMessage}")
+        case scala.util.Success(actual) => pinned.flatMap { f =>
+          actual.fields.find(_.name == f.name) match {
+            case None =>
+              Some(s"$name.${f.name}: pinned ${f.dataType.sql}, MISSING from file")
+            case Some(a) if norm(a.dataType) != norm(f.dataType) =>
+              Some(s"$name.${f.name}: pinned ${f.dataType.sql}, file has ${a.dataType.sql}")
+            case _ => None
+          }
         }
       }
     }
@@ -281,10 +211,9 @@ object Tables {
         diffs.mkString("\n  "))
   }
 
-  /** Pinned logical schemas (FIXTURES.md). `events.ts` is TimestampType —
-    * the canonical view type; nanos-era files go through
-    * [[eventsSchemaNanos]] + a DIV-1000 normalization instead (see
-    * [[eventsView]]). */
+  /** Pinned logical schemas (FIXTURES.md). The timestamp columns
+    * (`events.ts`, `o_orderdate`, `l_shipdate`) are TimestampType over
+    * the files' `timestamp[us]`. */
   val schemas: Map[String, StructType] = Map(
     "region" -> StructType(Seq(
       StructField("r_regionkey", IntegerType), StructField("r_name", StringType))),

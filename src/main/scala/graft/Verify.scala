@@ -84,11 +84,10 @@ object Verify {
     // Schema-drift guard (see Tables.assertSchemasMatch): LOUD but
     // non-fatal — queries over undrifted tables still verify; queries
     // over a drifted one fail with this banner naming the exact column
-    // instead of silently computing garbage (round 9: events.ts
-    // nanos→micros redded 11 rows with zero diagnostics).
-    // NonFatal, not just IllegalStateException: a missing/corrupt FILE
-    // throws AnalysisException from the footer probe itself, and the
-    // guard must never take down the queries over the healthy tables.
+    // instead of silently computing garbage (round 9: a changed events.ts
+    // type redded 11 rows with zero diagnostics). An unreadable footer is
+    // reported by the guard under its table's name; the guard must never
+    // take down the queries over the healthy tables.
     try Tables.assertSchemasMatch(spark, sfDir)
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[verify] SCHEMA DRIFT — affected results are garbage:\n${e.getMessage}")

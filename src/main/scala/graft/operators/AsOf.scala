@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * UNIONS the two sides tagged, sorts each key's timeline once, and
   * reads the answer off a running `max` window — LINEAR in the key's
   * event count, one shuffle + one sort, no intermediate blowup
-  * (`asof_hotuser` soak: measured quadratic-vs-linear separation).
+  * (`asof_hotuser` probe: measured quadratic-vs-linear separation,
+  * recorded in ROUND_NOTES.md, round 12; probe source `Soak.scala` at
+  * 99b069a).
   *
   * Strict-inequality semantics match the contract form exactly: probes
   * order BEFORE events at equal timestamps (tag 0 < 1), and the running

@@ -692,8 +692,10 @@ object Dedup {
     * (alternation theorem 4.2 of the paper), vs O(log diameter) for the
     * pointer-jumped sibling.
     *
-    * MEASURED (Soak `cc_chainhub` a/b, 2×10⁵-edge chain+hub graph,
-    * warm best-of-2): jumped 16.4 s, stars 24.4 s — stars pays ~6
+    * MEASURED (the `cc_chainhub` a/b, 2×10⁵-edge chain+hub graph,
+    * warm best-of-2; recorded in ROUND_NOTES.md, round 6, and
+    * OPTIMIZATION_r21.md, probe source `Soak.scala` at 99b069a):
+    * jumped 16.4 s, stars 24.4 s — stars pays ~6
     * shuffles per round (two symmetrize/orient passes, two groupBys, two
     * distincts) against the sibling's ~3, and at this scale per-round
     * cost dominates. The sibling therefore stays the default for every
@@ -1080,8 +1082,9 @@ object Dedup {
     * equivalence: per document, these spans equal the merged union of
     * q88's pair-run shingle intervals on the same corpus.
     *
-    * MEASURED CROSSOVER (Soak `spans_skew` r19 + `spans_scale` r20, the
-    * hot-banner corpus where every doc shares an 11-token opener): the
+    * MEASURED CROSSOVER (the `spans_skew` r19 + `spans_scale` r20
+    * probes, recorded in ROUND_NOTES.md rounds 19 and 20, probe source
+    * `Soak.scala` at 99b069a; the hot-banner corpus where every doc shares an 11-token opener): the
     * two forms part ways immediately and never re-converge — 4k→16k
     * docs grows the span wall 0.69→0.86 s (output = n rows by closed
     * form) while the uncapped pair join grows 2.5→143 s (output =
@@ -1293,7 +1296,9 @@ object Dedup {
     * measured slower than the window itself). The keep-first answer is
     * IDENTICAL (spec-pinned on a skew-salted corpus); the price is one
     * extra line-volume exchange for the flagging join. Measured
-    * (linededup_hotkey soak, one 200 B line hot in every doc): window
+    * (`linededup_hotkey` probe, one 200 B line hot in every doc;
+    * recorded in ROUND_NOTES.md, round 12, probe source `Soak.scala` at
+    * 99b069a): window
     * 77.7 s vs associative 50.5 s at 16M hot rows, growth 29.0× vs
     * 20.7× over a 16× sweep. Default stays the window form: strictly
     * less shuffle on realistically-skewed corpora. */

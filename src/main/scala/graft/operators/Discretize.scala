@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
   * `DiscretizeSpec` (fixture parity with Q11, a heavy-tie fixture, and
   * the n < buckets edge); the no-single-partition-sort claim is
   * plan-gated in PlanShapeSpec and the form is oracle-gated as q146
-  * against Q11's own DuckDB ntile SQL. Measured (`discretize_ab` soak,
-  * checksum-equal legs): across a 3M → 12M row step the window ntile
+  * against Q11's own DuckDB ntile SQL. Measured (`discretize_ab` probe,
+  * checksum-equal legs; recorded in ROUND_NOTES.md, round 14, probe
+  * source `Soak.scala` at 99b069a): across a 3M → 12M row step the window ntile
   * grows 3.53 s → 15.22 s (the one-partition sort), this form 1.48 s →
   * 2.07 s — 7.3x at 12M on 32 cores, widening with parallelism. */
 object Discretize {

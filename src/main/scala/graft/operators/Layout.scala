@@ -78,8 +78,10 @@ object Layout {
     * always grid-adjacent (Morton order jumps across the plane at every
     * power-of-two boundary), so an axis-aligned query rectangle decomposes
     * into FEWER, longer runs of curve positions — fewer files/row-groups
-    * touched per range predicate at the same file count (the measured
-    * claim lives in `Soak hilbert_ab`). The standard iterative xy→d
+    * touched per range predicate at the same file count (the `hilbert_ab`
+    * probe's measurement is recorded in ROUND_NOTES.md, "Probe results
+    * kept when Soak's A/B modes were deleted"; probe source `Soak.scala`
+    * at 99b069a). The standard iterative xy→d
     * transform: per level s = 2^i from the top bit down, quadrant digit
     * `(3·rx) xor ry` weighted s², then the lower quadrant is reflected/
     * transposed into canonical orientation. Pure integer CASE/shift

@@ -161,7 +161,8 @@ object Pca {
     * mean)·w terms, and at 64×64 the 4096-node expression blew janino's
     * method-size limit — Spark fell back to interpreted for the whole
     * stage (the q158 plan-size failure class, caught by running the
-    * opq_ab soak). The HOF form is a handful of loop nodes regardless
+    * `opq_ab` probe — ROUND_NOTES.md, round 16, probe source
+    * `Soak.scala` at 99b069a). The HOF form is a handful of loop nodes regardless
     * of dim. Returns (vec_id, proj: array<double> of length k). */
   def pcaProject(vectors: DataFrame, mean: Array[Double],
       components: Array[Array[Double]]): DataFrame = {

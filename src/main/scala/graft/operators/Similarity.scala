@@ -181,9 +181,10 @@ object Similarity {
   /** k-means‖ (SCALABLE k-means++) initialization — Bahmani et al. 2012,
     * made fully DETERMINISTIC: the principled fix for
     * [[trainCentroids]]' init-by-lowest-id, which seeds wherever the
-    * lowest ids happen to live (the index_drift soak measured exactly
+    * lowest ids happen to live (the `index_drift` probe measured exactly
     * that failure: ids concentrated in the stale distribution seed
-    * nothing in the drifted one). k-means++ fixes seeding but is
+    * nothing in the drifted one; recorded in ROUND_NOTES.md, round 14,
+    * probe source `Soak.scala` at 99b069a). k-means++ fixes seeding but is
     * inherently sequential (k corpus passes); k-means‖ gets the same
     * O(log φ)-competitive guarantee in `rounds` passes by OVERSAMPLING:
     * each round every point joins the candidate set independently with
@@ -863,8 +864,9 @@ object Similarity {
     * dimensions, the subspace that owns them burns its whole ksub budget
     * on a wide cloud while the other subspaces quantize noise —
     * scattering dimensions re-balances per-subspace variance (FAISS uses
-    * a random rotation as OPQ's init for the same reason; the measured
-    * lift lives in `Soak opq_ab`). Derivation is the md5 idiom so the
+    * a random rotation as OPQ's init for the same reason; the lift the
+    * `opq_ab` probe measured is recorded in ROUND_NOTES.md, round 16,
+    * probe source `Soak.scala` at 99b069a). Derivation is the md5 idiom so the
     * oracle RE-DERIVES it rather than trusting literals: dimension i
     * draws `u_i = int(md5("seed|i")[0,8))`; the permutation is the dims
     * sorted by (u_i, i), the sign is `+1` iff `u_i` is even. */

@@ -441,7 +441,9 @@ object StreamOps {
     * run LIVE against the persisted centroid artifacts: per event-time
     * window, the count / mean / min of the simplified-silhouette score
     * of every arriving vector. This is the label-free number the
-    * index_drift soak measured (0.476 stale → 0.791 recentered) — as a
+    * `index_drift` probe measured (0.476 stale → 0.791 recentered;
+    * recorded in ROUND_NOTES.md, round 16, probe source `Soak.scala` at
+    * 99b069a) — as a
     * stream it becomes the recenter TRIGGER: a window whose mean_s sags
     * is drift arriving, caught before the (expensive, batch) recall
     * audit would.

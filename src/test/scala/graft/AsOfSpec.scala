@@ -6,8 +6,9 @@ import graft.operators.AsOf
 
 /** [[AsOf.lastEventBefore]] — the union-sort as-of form must equal the
   * contract join-then-max shape (Q30) everywhere, including ties and
-  * no-prior-event rows; its existence is justified by the hot-key soak
-  * (`asof_hotuser`), not by these fixtures. */
+  * no-prior-event rows; its existence is justified by the hot-key probe
+  * (`asof_hotuser`, recorded in ROUND_NOTES.md, round 12; probe source
+  * `Soak.scala` at 99b069a), not by these fixtures. */
 class AsOfSpec extends SparkSpec {
   import spark.implicits._
 

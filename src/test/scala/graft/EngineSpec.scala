@@ -11,7 +11,6 @@ class EngineSpec extends AnyFunSuite {
     assert(Engine.confs(32, Engine.Profile.Default) == Map(
       "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       "spark.sql.warehouse.dir" ->
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse",

@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** The round-9 regression class: the driver silently changed a parquet
   * file's physical type (`events.ts` TIMESTAMP(NANOS) → timestamp[us]) and
-  * the engine computed 1970 garbage for a full round. These specs pin the
-  * two defenses: (a) the events reader PROBES the footer instead of
-  * assuming one layout, and (b) `Tables.assertSchemasMatch` names any
-  * pinned-vs-file divergence loudly. */
+  * the engine computed 1970 garbage for a full round. These specs pin that
+  * such a change is never silent: `Tables.assertSchemasMatch` names any
+  * pinned-vs-file divergence, or a footer Spark cannot read, by table, and
+  * a nanos `events` file also fails at its first action. */
 class SchemaDriftSpec extends SparkSpec {
 
   private def scaleDirWith(mutate: (String, String) => Unit): String = {
@@ -24,6 +24,12 @@ class SchemaDriftSpec extends SparkSpec {
 
   test("assertSchemasMatch passes on the pristine testdata dir") {
     Tables.assertSchemasMatch(spark, "/root/testdata/sf0.001")
+    // events.ts must read as a 2024 µs TimestampType — the exact
+    // assertion that caught round 9's corruption
+    val ev = Tables(spark, "/root/testdata/sf0.001").events
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val mn = ev.agg(min("ts")).head().getTimestamp(0)
+    assert(mn.toString.startsWith("2024-"), s"got $mn")
   }
 
   test("a type-drifted column fails loudly, naming table, column and both types") {
@@ -60,39 +66,10 @@ class SchemaDriftSpec extends SparkSpec {
     assert(e.getMessage.contains("MISSING"), e.getMessage)
   }
 
-  test("events reader adapts to the file's physical ts layout (probe, not pin)") {
-    // current files are timestamp[us]; the view must still be a 2024 µs
-    // TimestampType — the exact assertion that caught round 9's corruption
-    val ev = Tables.eventsView(spark, "/root/testdata/sf0.001")
-    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
-    val mn = ev.agg(min("ts")).head().getTimestamp(0)
-    assert(mn.toString.startsWith("2024-"), s"got $mn")
-
-    // synthesize a NANOS-era file (int64 raw nanos is indistinguishable
-    // from the legacy nanosAsLong read path) and check the same view
-    // comes back normalized to identical µs instants
-    val nanosDir = Files.createTempDirectory("drift-nanos").toString
-    val micros = Tables.eventsView(spark, "/root/testdata/sf0.001")
-      .withColumn("ts", expr("unix_micros(ts) * 1000")) // µs → raw nanos long
-    micros.coalesce(1).write.mode("overwrite").parquet(s"$nanosDir/tmp_ev")
-    val part = new java.io.File(s"$nanosDir/tmp_ev").listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    Files.copy(part.toPath, Paths.get(s"$nanosDir/events.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
-    assert(Tables.eventsTsIsNanos(spark, nanosDir),
-      "an int64 ts column must take the nanos read path")
-    val evN = Tables.eventsView(spark, nanosDir)
-    assert(evN.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
-    val mnN = evN.agg(min("ts")).head().getTimestamp(0)
-    assert(mnN == mn, s"nanos-path view must equal micros-path view: $mnN vs $mn")
-  }
-
-  test("a TRUE TIMESTAMP(NANOS)-annotated file trips the probe and round-trips to µs") {
-    // The raw-int64 test above exercises the nanos READ path; this one
-    // guards the PROBE itself against the layout the rounds-1-8 driver
-    // actually shipped: an int64 column annotated TIMESTAMP(NANOS,
-    // isAdjustedToUTC=false), which Spark cannot write — so the file is
-    // written with parquet-mr directly.
+  test("a TIMESTAMP(NANOS) events file fails the schema gate and the first action") {
+    // the layout the rounds-1-8 generator shipped: an int64 column
+    // annotated TIMESTAMP(NANOS, isAdjustedToUTC=false), which Spark
+    // cannot write — so the file is written with parquet-mr directly
     import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -100,37 +77,48 @@ class SchemaDriftSpec extends SparkSpec {
     import org.apache.parquet.hadoop.util.HadoopOutputFile
     import org.apache.hadoop.fs.{Path => HPath}
 
-    val rows = Tables.eventsView(spark, "/root/testdata/sf0.001")
-      .select(col("event_id"), expr("unix_micros(ts)").as("us"))
-      .orderBy("event_id").limit(50)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-
+    // every pinned column is present, so only the ts layout differs
+    val rows = Tables(spark, "/root/testdata/sf0.001").events
+      .select(col("event_id"), expr("unix_micros(ts)"), col("user_id"),
+        col("event_type"), col("value"), col("props"))
+      .orderBy("event_id").limit(50).collect()
+    val str = LogicalTypeAnnotation.stringType()
     val schema = Types.buildMessage()
       .required(PrimitiveTypeName.INT64).named("event_id")
       .required(PrimitiveTypeName.INT64)
         .as(LogicalTypeAnnotation.timestampType(false,
           LogicalTypeAnnotation.TimeUnit.NANOS))
         .named("ts")
+      .required(PrimitiveTypeName.INT64).named("user_id")
+      .required(PrimitiveTypeName.BINARY).as(str).named("event_type")
+      .required(PrimitiveTypeName.DOUBLE).named("value")
+      .required(PrimitiveTypeName.BINARY).as(str).named("props")
       .named("events")
-    val dir = Files.createTempDirectory("drift-true-nanos").toString
-    val conf = new org.apache.hadoop.conf.Configuration()
-    GroupWriteSupport.setSchema(schema, conf)
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new HPath(s"$dir/events.parquet"), conf))
-      .withConf(conf).withType(schema).build()
-    val gf = new SimpleGroupFactory(schema)
-    rows.foreach { case (id, us) =>
-      writer.write(gf.newGroup().append("event_id", id).append("ts", us * 1000L))
+    val dir = scaleDirWith { (_, out) =>
+      val target = new java.io.File(s"$out/events.parquet")
+      target.delete()
+      val conf = new org.apache.hadoop.conf.Configuration()
+      GroupWriteSupport.setSchema(schema, conf)
+      val writer = ExampleParquetWriter
+        .builder(HadoopOutputFile.fromPath(new HPath(target.getPath), conf))
+        .withConf(conf).withType(schema).build()
+      val gf = new SimpleGroupFactory(schema)
+      rows.foreach { r =>
+        writer.write(gf.newGroup().append("event_id", r.getLong(0))
+          .append("ts", r.getLong(1) * 1000L).append("user_id", r.getLong(2))
+          .append("event_type", r.getString(3)).append("value", r.getDouble(4))
+          .append("props", r.getString(5)))
+      }
+      writer.close()
     }
-    writer.close()
 
-    assert(Tables.eventsTsIsNanos(spark, dir),
-      "an annotated TIMESTAMP(NANOS) column must take the nanos read path")
-    val got = Tables.eventsView(spark, dir)
-      .select(col("event_id"), expr("unix_micros(ts)").as("us"))
-      .orderBy("event_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.toSeq == rows.toSeq,
-      "nanos-annotated file must round-trip to the identical µs instants")
+    val e = intercept[IllegalStateException] {
+      Tables.assertSchemasMatch(spark, dir)
+    }
+    assert(e.getMessage.contains("events: unreadable footer") &&
+      e.getMessage.contains("PARQUET_TYPE_ILLEGAL"), e.getMessage)
+    intercept[org.apache.spark.SparkException] {
+      Tables(spark, dir).events.agg(min("ts")).head()
+    }
   }
 }

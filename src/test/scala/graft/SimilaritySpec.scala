@@ -583,8 +583,9 @@ class SimilaritySpec extends SparkSpec {
 
   /** Low ids ALL in cluster A (around +x), the far cluster B (around +y)
     * only at the highest ids — the exact layout where first-k-by-id
-    * seeding is blind (both seeds in A) and the index_drift soak showed
-    * real recall damage. */
+    * seeding is blind (both seeds in A) and the `index_drift` probe showed
+    * real recall damage (ROUND_NOTES.md, round 14; probe source
+    * `Soak.scala` at 99b069a). */
   private def kmppFixture = {
     val a = (0 until 36).map(i => (i.toLong, Seq(1.0, 0.001 * (i % 6))))
     val b = (36 until 40).map(i => (i.toLong, Seq(0.001 * (i % 4), 1.0)))

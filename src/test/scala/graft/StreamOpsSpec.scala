@@ -304,8 +304,7 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("eventsStream on a not-yet-populated dir starts on the pinned schema") {
-    // files arriving only after start is the supported streaming shape;
-    // the batch footer probe must not run (and throw) on the empty dir
+    // files arriving only after start is the supported streaming shape
     val dir = Files.createTempDirectory("events-empty").toString
     val s = Tables.eventsStream(spark, dir)
     assert(s.isStreaming &&
@@ -317,7 +316,7 @@ class StreamOpsSpec extends SparkSpec {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val n = spark.table("ev_late_start").head().getLong(0)
-    val want = Tables.eventsView(spark, "/root/testdata/sf0.001").count()
+    val want = Tables(spark, "/root/testdata/sf0.001").events.count()
     assert(n == want, s"late-arriving file must be read whole: $n vs $want")
   }
 

@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming.Trigger
   * must equal the batch Q21/Q22 results. */
 class StreamingParitySpec extends SparkSpec {
 
-  /** File-source stream of the sf0.001 events table (nanos normalized the
-    * same way as Tables.events). */
+  /** File-source stream of the sf0.001 events table (same pinned schema
+    * as Tables.events). */
   private lazy val streamDir: String = {
     val dir = Files.createTempDirectory("events-stream")
     Files.copy(

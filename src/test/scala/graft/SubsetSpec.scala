@@ -181,6 +181,6 @@ class SubsetSpec extends SparkSpec {
       .head().getLong(0)
     assert(n > 0)
     val ev = spark.sql("SELECT min(ts) FROM events").head().getTimestamp(0)
-    assert(ev.toString.startsWith("2024-01-01"), s"events view must be nanos-normalized, got $ev")
+    assert(ev.toString.startsWith("2024-01-01"), s"events view must read 2024 µs timestamps, got $ev")
   }
 }
